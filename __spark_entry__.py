@@ -609,9 +609,8 @@ def _q_pelt_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binomial cost: the 2-row (successes; trials) input shape — trials
     n_i = 1 + turn_idx % 3, successes k_i = n_i when value is above the
     conversation median else 0."""
-    import pandas as pd
-
     from transcriptts.kernels.pelt import pelt
+    from transcriptts.partitioning import per_series
 
     w = Window.partitionBy("conv_id")
     s = _signal(spark, sf_dir).select(
@@ -626,20 +625,11 @@ def _q_pelt_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("successes"),
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+    def run(_, mat):
+        return {"breakpoint_idx": pelt(mat, penalty=1.0, cost="binomial", min_size=3)}
 
-        pdf = pdf.sort_values("turn_idx")
-        mat = np.vstack([pdf["successes"].to_numpy(float), pdf["trials"].to_numpy(float)])
-        bps = pelt(mat, penalty=1.0, cost="binomial", min_size=3)
-        return pd.DataFrame({"conv_id": pdf["conv_id"].iloc[0], "breakpoint_idx": bps})
-
-    from transcriptts.partitioning import kernel_partitions
-
-    return (
-        kernel_partitions(s, "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, "conv_id string, breakpoint_idx long")
+    return per_series(
+        s, ["conv_id"], "turn_idx", ["successes", "trials"], run, "conv_id string, breakpoint_idx long"
     )
 
 

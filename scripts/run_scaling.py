@@ -238,7 +238,13 @@ def main() -> None:
     # leg and bias the measured efficiency down
     cap_gb = _heap_cap_gb()
     if cap_gb is not None and args.heap_per_core * args.high > cap_gb:
-        clamped = max(1, cap_gb // args.high)
+        clamped = cap_gb // args.high
+        if clamped < 1:
+            # even 1 GB/core exceeds the cap: spark_submit's per-call clamp
+            # would then shrink only the wide leg, the bias this avoids
+            sys.exit(f"--high {args.high} needs at least {args.high}g of heap "
+                     f"(1g per core) but the cap is {cap_gb}g (60% of "
+                     f"MemAvailable); lower --high or free memory")
         print(f"clamping --heap-per-core {args.heap_per_core} -> {clamped} "
               f"so the local[{args.high}] leg fits {cap_gb}g "
               f"(60% of MemAvailable); both legs keep equal per-core heap",

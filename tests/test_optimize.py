@@ -75,9 +75,11 @@ def test_nelder_mead_lattice_quadratics_round_exact():
     """The nelder_mead_quadratic driver query's correctness premise: for
     every turn count n, NM on the derived strictly convex quadratic lands
     close enough to the exact-sixteenth argmin that 4-dp rounding recovers
-    it EXACTLY (the oracle computes the argmin analytically). Sweep the
-    full residue space of the derivation (lcm of the moduli involved
-    covers all distinct (a, b, c, mx, my) combos well before 2000)."""
+    it EXACTLY (the oracle computes the argmin analytically). The sweep
+    n = 1, 8, ..., 1996 hits every residue of n mod 5, 11 and 29, which
+    gives 286 distinct (a, b, c, mx, my) tuples out of the 231,275 the
+    moduli allow: 145 of the 21,025 (a, b, mx, my) classes, not all of
+    them."""
     for n in range(1, 2001, 7):  # every residue class mod 29, 5, 11 is hit
         a = float(n % 5 + 1)
         b = float((n * 3) % 5 + 1)

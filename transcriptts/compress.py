@@ -8,7 +8,7 @@ roundtrip is bit-exact.
 
 Chunking: `chunk` = floor(bucket epoch / chunk_seconds) so one blob covers a
 bounded time range (default 1 day of 1m points = <=1440 points/blob). The
-groupBy carries only (ts, value) pairs — Arrow-batched, no per-row Python.
+grouping carries only (ts, value) pairs — Arrow-batched, no per-row Python.
 
 At 100 TB this is the storage win for cold data: a metronome-ish series
 packs ~60-80x for timestamps and 5-20x for values; blobs stay individually
@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .partitioning import per_series
 
 COMPRESSED_SCHEMA = (
     "conv_id string, metric string, chunk long, n int, "
@@ -35,7 +37,6 @@ def compress_series(
 ) -> DataFrame:
     """Rollup points → one compressed chunk row per (conv_id, metric, chunk)."""
     import numpy as np
-    import pandas as pd
 
     from .kernels.gorilla import encode_floats, encode_timestamps
 
@@ -47,51 +48,25 @@ def compress_series(
         F.col(value_col).cast("double").alias("_v"),
     )
 
-    # Grouping happens JVM-side (collect_list + sort_array on a (ts, v)
-    # struct — ts is the leading struct field, so sort_array orders by
-    # time); Python then sees whole Arrow BATCHES of chunk rows, not one
-    # pandas group per chunk. With day-sized chunks the groups are tiny
-    # (a handful of points), so a per-group applyInPandas paid ~ms of
-    # pandas overhead per chunk — 40k chunks made that the whole runtime.
-    from .partitioning import kernel_partitions
+    # Day-sized chunks hold a handful of points, so a pandas frame per chunk
+    # would cost more than the encoding (40k chunks once made it the whole
+    # runtime); per_series orders each chunk JVM-side and hands Python whole
+    # Arrow batches of chunks.
+    def pack(ts, vals):
+        ts = ts.astype("datetime64[us]")
+        ts_blob = encode_timestamps(ts.astype(np.int64))
+        val_blob = encode_floats(vals)
+        return {
+            "n": [len(vals)],
+            "ts_min": [ts[0]],
+            "ts_max": [ts[-1]],
+            "ts_blob": [ts_blob],
+            "val_blob": [val_blob],
+            "raw_bytes": [len(vals) * 16],
+            "enc_bytes": [len(ts_blob) + len(val_blob)],
+        }
 
-    grouped = (
-        kernel_partitions(base, "conv_id", "metric", "chunk")
-        .groupBy("conv_id", "metric", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("_ts", "_v"))).alias("pts"))
-        .select(
-            "conv_id", "metric", "chunk",
-            F.col("pts._ts").alias("ts_arr"), F.col("pts._v").alias("v_arr"),
-        )
-    )
-
-    def pack_batches(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "conv_id", "metric", "chunk", "n", "ts_min", "ts_max",
-                "ts_blob", "val_blob", "raw_bytes", "enc_bytes",
-            )}
-            for conv_id, metric, chunk, ts_arr, v_arr in zip(
-                pdf["conv_id"], pdf["metric"], pdf["chunk"], pdf["ts_arr"], pdf["v_arr"]
-            ):
-                ts = np.asarray(ts_arr).astype("datetime64[us]")
-                ts_us = ts.astype(np.int64)
-                vals = np.asarray(v_arr, dtype=np.float64)
-                ts_blob = encode_timestamps(ts_us)
-                val_blob = encode_floats(vals)
-                out["conv_id"].append(conv_id)
-                out["metric"].append(metric)
-                out["chunk"].append(chunk)
-                out["n"].append(len(vals))
-                out["ts_min"].append(ts[0])
-                out["ts_max"].append(ts[-1])
-                out["ts_blob"].append(ts_blob)
-                out["val_blob"].append(val_blob)
-                out["raw_bytes"].append(len(vals) * 16)
-                out["enc_bytes"].append(len(ts_blob) + len(val_blob))
-            yield pd.DataFrame(out)
-
-    return grouped.mapInPandas(pack_batches, COMPRESSED_SCHEMA)
+    return per_series(base, ["conv_id", "metric", "chunk"], "_ts", ["_v"], pack, COMPRESSED_SCHEMA)
 
 
 def decompress_series(df: DataFrame) -> DataFrame:
@@ -122,8 +97,9 @@ def decompress_series(df: DataFrame) -> DataFrame:
             }
         )
 
-    # mapInPandas: each chunk row explodes independently, no shuffle at all
-    return df.mapInPandas(
+    # each chunk row explodes independently, so no shuffle: a coalesce to the
+    # task slots runs the Python stage in one wave (partitioning.py)
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism).mapInPandas(
         lambda it: (unpack(pdf) for pdf in it),
         "conv_id string, metric string, bucket_start timestamp, value double",
     )

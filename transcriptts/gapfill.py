@@ -17,9 +17,10 @@ Two implementations with identical semantics:
      value (``first(value, ignoreNulls=True)`` over the forward frame).
    Leading gaps stay null in both modes (nothing to carry).
 
-2. ``gapfill_pandas`` — grouped Arrow UDF using pandas ``ffill`` /
-   ``interpolate`` — kept as a golden cross-check of (1), and the shape the
-   north rule names ('gap-fill inside vectorized pandas/Arrow UDFs').
+2. ``gapfill_pandas`` — pandas ``ffill`` / ``interpolate`` per series,
+   run through `partitioning.per_series` over Arrow batches — kept as a
+   golden cross-check of (1), and the shape the north rule names ('gap-fill
+   inside vectorized pandas/Arrow UDFs').
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import per_series
 from .schema import TIER_SECONDS
 
 
@@ -93,43 +95,30 @@ def gapfill_pandas(
     tier: str = "1m",
     value_cols: tuple[str, ...] = ("mean",),
 ) -> DataFrame:
-    """Arrow-UDF gap-fill (golden cross-check of `gapfill`).
+    """Pandas gap-fill (golden cross-check of `gapfill`).
 
-    Each (conv_id, metric) group reindexes onto the dense bucket grid in
-    pandas, then ffill (LOCF) and time-linear interpolate. Groups are
-    independent → parallelism = number of series; no per-row Python.
+    Each (conv_id, metric) series reindexes onto the dense bucket grid in
+    pandas, then ffill (LOCF) and time-linear interpolate, one kernel call
+    per series through `partitioning.per_series`; no per-row Python.
     """
+    import numpy as np
     import pandas as pd
 
     step = TIER_SECONDS[tier]
-    base = rollup_df.select("conv_id", "metric", "bucket_start", *value_cols)
-
     fields = ", ".join(
         ["conv_id string", "metric string", "bucket_start timestamp", "is_gap boolean"]
         + [f"{c}_locf double" for c in value_cols]
         + [f"{c}_interp double" for c in value_cols]
     )
 
-    def fill(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket_start")
-        idx = pd.date_range(
-            pdf["bucket_start"].iloc[0], pdf["bucket_start"].iloc[-1], freq=f"{step}s"
-        )
-        g = pdf.set_index("bucket_start").reindex(idx)
-        res = pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "metric": pdf["metric"].iloc[0],
-                "bucket_start": idx,
-                "is_gap": g[value_cols[0]].isna() if value_cols else False,
-            }
-        )
+    def fill(t, x):
+        idx = pd.date_range(t[0], t[-1], freq=f"{step}s")
+        grid = [pd.Series(v, index=pd.DatetimeIndex(t)).reindex(idx) for v in np.atleast_2d(x)]
+        out = {"bucket_start": idx, "is_gap": grid[0].isna()}
         # leading gaps stay NaN for both modes (matches column-expression path)
-        for c in value_cols:
-            res[f"{c}_locf"] = g[c].ffill().to_numpy()
-            res[f"{c}_interp"] = (
-                g[c].interpolate(method="index", limit_area="inside").to_numpy()
-            )
-        return res
+        for c, g in zip(value_cols, grid):
+            out[f"{c}_locf"] = g.ffill().to_numpy()
+            out[f"{c}_interp"] = g.interpolate(method="index", limit_area="inside").to_numpy()
+        return out
 
-    return base.groupBy("conv_id", "metric").applyInPandas(fill, fields)
+    return per_series(rollup_df, ["conv_id", "metric"], "bucket_start", value_cols, fill, fields)

@@ -39,8 +39,10 @@ def get_spark(
         # coalesced to 1-2 partitions and the kernel stage runs on one core
         # (measured 105s -> 11.5s for penalty selection at local[32]).
         # Shuffle width is already sized to cores above, so coalescing buys
-        # little here; kernel stages additionally pin their own width via
-        # partitioning.kernel_partitions for sessions that re-enable this.
+        # little here; Python kernel stages set their own width (one wave of
+        # task slots) with an explicit exchange that AQE never coalesces,
+        # see partitioning.per_series, so they hold in sessions that
+        # re-enable this too.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -2,11 +2,11 @@
 
 Two execution paths, same semantics:
 
-- ``smooth(df, kind=...)`` — grouped Arrow UDF (`applyInPandas`) running the
-  reference-parity numpy kernels per conversation. One shuffle by conv_id;
-  each group is a single Arrow batch; no per-row Python. This is the golden
-  path (exact reference quirks) and the only path for EMA/Savitzky-Golay,
-  which are sequential/edge-quirky.
+- ``smooth(df, kind=...)`` — the reference-parity numpy kernels run once per
+  conversation through `partitioning.per_series`: one shuffle by conv_id,
+  each series grouped and ordered JVM-side, one task wave of Arrow batches;
+  no per-row Python. This is the golden path (exact reference quirks) and
+  the only path for EMA/Savitzky-Golay, which are sequential/edge-quirky.
 - ``sma_window(df, w)`` — pure Catalyst sliding-window average ('valid'
   mode), for when smoothing is fused into a larger plan: no Python at all,
   whole-stage codegen, incremental frame evaluation.
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .kernels import smoothing as K
+from .partitioning import per_series
 
 _OUT_SCHEMA = "conv_id string, pos long, value double"
 
@@ -59,31 +60,16 @@ def smooth(
     probe_n = max(probe_n, len(np.atleast_1d(params.get("weights", [0.0]))))
     kernel(np.zeros(probe_n), **params)
 
-    import pandas as pd
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+    def run(_, x):
         try:
-            out = kernel(pdf[value_col].to_numpy(dtype=float), **params)
+            out = kernel(x, **params)
         except ValueError:
             if strict:
                 raise
-            out = []
-        return pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "pos": range(len(out)),
-                "value": out,
-            }
-        )
+            return None
+        return {"pos": range(len(out)), "value": out}
 
-    from .partitioning import kernel_partitions
-
-    return (
-        kernel_partitions(df.select("conv_id", order_col, value_col), "conv_id")
-        .groupBy("conv_id")
-        .applyInPandas(run, _OUT_SCHEMA)
-    )
+    return per_series(df, ["conv_id"], order_col, [value_col], run, _OUT_SCHEMA)
 
 
 def sma_window(
