@@ -1819,13 +1819,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "holt_forecast": _q_holt,
         "gorilla_roundtrip_agg": _q_gorilla_roundtrip,
         "turns_text_fingerprint": _q_turns_text_fingerprint,
-        # (d continued) distinct PELT cost functions, r04-green, unchanged
+        # (d continued) distinct PELT cost functions, r04-green, unchanged;
+        # pelt_l1 is the 50th entry, the last inside the window
         "pelt_l2": _q_pelt,
         "pelt_l1": _q_pelt_cost("l1", 5.0),
+        # (e) tail, past the 50-query window: r04-green variants over
+        # unchanged files (cap-skippable)
         "pelt_poisson": _q_pelt_poisson,
         "pelt_bernoulli": _q_pelt_bernoulli,
         "pelt_binomial": _q_pelt_binomial,
-        # (e) tail: r04-green variants over unchanged files (cap-skippable)
         "pelt_rbf": _q_pelt_cost("rbf", 2.0),
         "pelt_gaussian": _q_pelt_cost("gaussian", 10.0),
         "pelt_ar1": _q_pelt_cost("ar", 10.0, order=1),

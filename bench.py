@@ -3,7 +3,10 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <sf>, "turns_per_sec": ...}
+   "queries": {...per-query min sec...}, "sf": <sf>, "turns_per_sec": ...,
+   "passes": N, "walls": {"tier_pipeline": [...], "<query>": [...]},
+   "nproc": <usable cores>}
+"walls" holds every timed pass's wall (sec), in pass order.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR  testdata dir (default /root/testdata/sf0.1)
@@ -77,7 +80,7 @@ def main() -> None:
     # protocol, comparable across rounds); per-tier entries are the min per
     # tier across passes (a noise burst inside the best-total pass would
     # otherwise be reported as that tier's cost).
-    tier_total = None
+    walls: dict[str, list[float]] = {"tier_pipeline": []}
     per_tier_min: dict[str, float] = {}
     for _ in range(passes):
         t0 = time.time()
@@ -88,9 +91,8 @@ def main() -> None:
             key = f"tier_{name}"
             if key not in per_tier_min or w < per_tier_min[key]:
                 per_tier_min[key] = w
-        wall = time.time() - t0
-        if tier_total is None or wall < tier_total:
-            tier_total = wall
+        walls["tier_pipeline"].append(round(time.time() - t0, 3))
+    tier_total = min(walls["tier_pipeline"])
     timings.update(per_tier_min)
     tdf.unpersist()
     turns_per_sec = n_turns * 3 / tier_total  # turns rolled into 3 tiers
@@ -99,13 +101,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     for name, fn in entrymod.queries().items():
-        best = None
+        walls[name] = []
         for _ in range(passes):
             t1 = time.time()
             materialize(fn(spark, sf_dir))
-            w = round(time.time() - t1, 3)
-            best = w if best is None or w < best else best
-        timings[name] = best
+            walls[name].append(round(time.time() - t1, 3))
+        timings[name] = min(walls[name])
 
     total = round(sum(timings.values()), 3)
     print(
@@ -120,6 +121,9 @@ def main() -> None:
                 "tier_pipeline_sec": round(tier_total, 3),
                 "turns_per_sec": round(turns_per_sec, 1),
                 "cpus": cpus,
+                "passes": passes,
+                "walls": walls,
+                "nproc": len(os.sched_getaffinity(0)),
             }
         )
     )

@@ -322,3 +322,140 @@ def test_compact_partitions_crash_recovery(spark, tmp_path):
     }
     assert fp_after == fp_before
     assert sorted(rep["compacted"]) == sorted(d.split("=", 1)[1] for d in parts)
+
+
+def _mk_turns(spark, rows):
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+
+
+def _assert_lineage_matches_read_back(p, report):
+    """Every tier the run wrote: lineage and state figures equal what reading
+    the tier back gives (rows and max bucket_start per p_date, parquet file
+    sizes per partition directory)."""
+    from pyspark.sql import functions as F
+
+    state = p.load_state()["tiers"]
+    assert report["snapshot_ids"]
+    for tier, sid in report["snapshot_ids"].items():
+        with open(os.path.join(p.root, "lineage", f"{sid}.json")) as f:
+            lin = json.load(f)
+        stats = (
+            p.read_tier(tier).groupBy("p_date")
+            .agg(F.count("*").alias("rows"), F.max("bucket_start").alias("mx"))
+            .orderBy("p_date").collect()
+        )
+        sizes: dict[str, int] = {}
+        for dp, _, fns in os.walk(os.path.join(p.root, f"tier={tier}")):
+            for fn in fns:
+                if fn.endswith(".parquet"):
+                    key = os.path.basename(dp).split("=", 1)[1]
+                    sizes[key] = sizes.get(key, 0) + os.path.getsize(os.path.join(dp, fn))
+        expected = [
+            {"p_date": str(r["p_date"]), "rows": r["rows"], "bytes": sizes[str(r["p_date"])]}
+            for r in stats
+        ]
+        assert lin["version"] == 2, tier
+        assert lin["partitions"] == expected, tier
+        assert lin["rows"] == sum(r["rows"] for r in stats) == state[tier]["rows"], tier
+        assert lin["bytes"] == sum(sizes.values()) == state[tier]["bytes"], tier
+        assert state[tier]["watermark"] == str(max(r["mx"] for r in stats)), tier
+        assert state[tier]["snapshot_id"] == sid
+
+
+def test_lineage_matches_tier_read_back(spark, transcripts, tmp_path):
+    """Lineage and state come from the write's Observation and the parquet
+    footers, never from reading a tier back; they must still equal the
+    read-back figures after a full run, an incremental run and a mixed run
+    (one tier recomputed fully, the others incremental)."""
+    from pyspark.sql import functions as F
+
+    def shifted(days):
+        return transcripts.withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {days} DAYS")) \
+            .withColumn("conv_id", F.concat("conv_id", F.lit(f"-{days}")))
+
+    p = RollupPipeline(spark, str(tmp_path / "tiers"))
+    _assert_lineage_matches_read_back(p, p.run(transcripts))
+
+    two = transcripts.unionByName(shifted(1))
+    rep = p.run(two, incremental=True)
+    assert all(rep["metrics"][t]["incremental_from"] for t in ("1m", "1h", "1d"))
+    _assert_lineage_matches_read_back(p, rep)
+
+    st = p.load_state()
+    del st["tiers"]["1h"]
+    p._commit_state(st)
+    rep = p.run(two.unionByName(shifted(2)), incremental=True)
+    assert rep["metrics"]["1h"]["incremental_from"] is None
+    assert rep["metrics"]["1m"]["incremental_from"] and rep["metrics"]["1d"]["incremental_from"]
+    _assert_lineage_matches_read_back(p, rep)
+
+
+def _three_days():
+    """Whole-minute turns over three days; conversation a crosses both
+    midnights and b crosses the second, so seed rows carry latencies."""
+    import datetime as dt
+
+    d1, d2, d3 = (dt.datetime(2025, 7, day) for day in (1, 2, 3))
+    m = lambda base, minutes: base + dt.timedelta(minutes=minutes)
+    a = [m(d1, 22 * 60 + 7 * i) for i in range(20)] + [m(d2, 3 + 11 * i) for i in range(5)]
+    a += [m(d2, 23 * 60 + 5 * i) for i in range(6)] + [m(d3, 4 + 9 * i) for i in range(4)]
+    b = [m(d2, 600 + 13 * i) for i in range(8)] + [m(d2, 23 * 60 + 40)] + [m(d3, 30 + i) for i in range(3)]
+    c = [m(d3, 300 + 2 * i) for i in range(7)]
+    rows = [
+        (conv, i, "user", " ".join(["w"] * (1 + i % 4)), None, ts)
+        for conv, stamps in (("a", a), ("b", b), ("c", c))
+        for i, ts in enumerate(stamps)
+    ]
+    return [[r for r in rows if r[5] < end] for end in (d2, d3, dt.datetime(2025, 7, 4))]
+
+
+def test_mixed_watermarks_equal_full_recompute(spark, tmp_path):
+    """1d is committed a day behind 1m/1h; the next incremental run cuts
+    one shared batch at 1d's watermark date and filters it per tier, and
+    every tier still equals a full recompute."""
+    upto1, upto2, upto3 = _three_days()
+    p = RollupPipeline(spark, str(tmp_path / "tiers"))
+    p.run(_mk_turns(spark, upto1))
+    p.run(_mk_turns(spark, upto2), tiers=("1m", "1h"), incremental=True)
+    marks = {t: e["watermark"][:10] for t, e in p.load_state()["tiers"].items()}
+    assert marks == {"1m": "2025-07-02", "1h": "2025-07-02", "1d": "2025-07-01"}
+
+    rep = p.run(_mk_turns(spark, upto3), incremental=True)
+    assert all(rep["metrics"][t]["incremental_from"] for t in ("1m", "1h", "1d"))
+    _assert_lineage_matches_read_back(p, rep)
+    full = RollupPipeline(spark, str(tmp_path / "full"))
+    full.run(_mk_turns(spark, upto3))
+    for t in ("1m", "1h", "1d"):
+        assert p.content_hash(t) == full.content_hash(t), t
+
+
+# Jobs of one incremental 3-tier run without a fingerprint (local[4], AQE):
+#   2  fingerprint scan (aggregate's shuffle-map job + result job)
+#   1  convstate footer read for the seed rows' schema
+#   2  shared batch: lag() window shuffle-map job, then the job that fills
+#      its cache
+#   6  per tier: repartition(p_date) shuffle-map job + write job (the rollup
+#      groupBy reuses the cached batch's conv_id partitioning)
+#   2  convstate update: the same two jobs
+# Reading a written tier back or rescanning raw per tier pushes it over.
+PIPELINE_JOB_BUDGET = 13
+
+
+def test_incremental_run_job_budget(spark, tmp_path):
+    """An incremental 3-tier run issues at most PIPELINE_JOB_BUDGET Spark
+    jobs: bookkeeping rides on the writes, no tier is read back."""
+    upto1, upto2, _ = _three_days()
+    p = RollupPipeline(spark, str(tmp_path / "tiers"))
+    p.run(_mk_turns(spark, upto1))
+    df = _mk_turns(spark, upto2)
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-job-budget", "incremental RollupPipeline.run")
+    try:
+        p.run(df, incremental=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-budget")
+    assert len(jobs) <= PIPELINE_JOB_BUDGET, len(jobs)

@@ -1,12 +1,11 @@
 """Resumable, snapshot-checkpointed rollup pipeline with lineage + metrics.
 
 North-rule shape: 'rollups run as a resumable Iceberg-snapshot-checkpointed
-pipeline emitting per-partition lineage and row-count/byte metrics'. This
-sandbox has no Iceberg runtime jars, so the pipeline implements the same
-contract on parquet + an atomically-swapped JSON manifest; every concept maps
-1:1 onto Iceberg when the catalog is available (snapshot id ↔ Iceberg
-snapshot id, manifest swap ↔ commit, watermark ↔ WAP branch publish,
-partition dir ↔ hidden partition days(bucket_start)):
+pipeline emitting per-partition lineage and row-count/byte metrics'. Without
+Iceberg runtime jars the pipeline implements the same contract on parquet +
+an atomically-swapped JSON manifest; every concept maps 1:1 onto Iceberg
+(snapshot id ↔ Iceberg snapshot id, manifest swap ↔ commit, watermark ↔ WAP
+branch publish, partition dir ↔ hidden partition days(bucket_start)):
 
 layout under root/:
   state.json                    -- atomic checkpoint: per-tier watermark +
@@ -17,22 +16,22 @@ layout under root/:
 Resume semantics:
 - a tier whose state entry matches the current input fingerprint is skipped
   entirely (idempotent rerun after a crash between tiers);
-- with `incremental=True` and a previously committed watermark, the RAW
-  input is filtered to ts >= date(watermark) BEFORE the rollup — a plain
-  pushable predicate, so the parquet scan itself prunes to post-watermark
-  partitions (at 100 TB this is the whole point: an incremental run never
-  rereads history). The affected date partitions are then overwritten via
-  dynamic partition overwrite — the standard continuous-aggregate
-  maintenance pattern;
-- the one metric that looks across the cutoff — inter-turn latency, a
-  lag() over the conversation — stays EXACT via a seed-row state table
-  (`convstate/`, one row per (conv, date): the date's last turn). The
-  incremental batch unions the per-conv last turn before the cutoff, the
-  window computes true latencies for the first post-cutoff turns, and the
-  seed rows are dropped before aggregation. convstate itself is maintained
-  incrementally (only dates >= the cutoff are rewritten);
-- state.json is swapped via os.replace AFTER the tier's data lands, so a
-  crash at any point leaves a consistent (re-runnable) view.
+- with `incremental=True` and a previously committed watermark, a tier reads
+  only raw rows with ts >= date(watermark) and dynamically overwrites the
+  date partitions it produces (continuous-aggregate maintenance). The
+  predicate keeps history out of the window and the rollup but skips no raw
+  file or row group: raw is partitioned by p_date, not ts, and INT96 ts has
+  no statistics, so the scan reads as many bytes as the fingerprint scan;
+- inter-turn latency, a lag() across the cutoff, stays EXACT via a seed-row
+  table (`convstate/`: per (conv, date) that date's last turn) unioned into
+  the batch and dropped before aggregation; convstate is rewritten only for
+  dates >= the cutoff;
+- state.json is swapped via os.replace AFTER the tier's data and lineage
+  land, so a crash at any point leaves a consistent (re-runnable) view.
+
+A run derives each input kind once (a batch cut at the earliest watermark,
+a full frame) and reads no tier back: watermarks come from an Observation
+on the write, per-partition rows and bytes from parquet footers.
 
 Every write sorts within partitions by (conv_id, metric, bucket_start) so a
 rerun of the same input produces identical logical content (verified by the
@@ -46,12 +45,41 @@ import os
 import shutil
 import time
 import uuid
+from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .rollup import rollup, with_derived_metrics
 from .schema import TIERS
+
+
+def _cutoff(watermark: str):
+    """Start of the watermark's date: incremental batches begin here."""
+    return F.to_timestamp(F.to_date(F.lit(watermark)))
+
+
+def _later(watermark: str | None, observed: datetime | None) -> str | None:
+    """The later of a watermark and an observed max bucket_start, as timestamps."""
+    if observed is None or (watermark and datetime.fromisoformat(watermark) >= observed):
+        return watermark
+    return str(observed)
+
+
+def _partition_stats(path: str) -> list[dict]:
+    """{p_date, rows, bytes} per tier partition, from parquet footers and file sizes."""
+    parts = []
+    for dp, _, fns in sorted(os.walk(path)):
+        files = [os.path.join(dp, fn) for fn in fns if fn.endswith(".parquet")]
+        if files and os.path.basename(dp).startswith("p_date="):
+            parts.append({
+                "p_date": os.path.basename(dp).split("=", 1)[1],
+                "rows": sum(pq.read_metadata(f).num_rows for f in files),
+                "bytes": sum(os.path.getsize(f) for f in files),
+            })
+    return parts
 
 
 class RollupPipeline:
@@ -87,8 +115,8 @@ class RollupPipeline:
 
     def _update_convstate(self, turns: DataFrame, incremental_dates: bool) -> None:
         """Upsert (conv_id, p_date) -> last turn of that date. `turns` is the
-        (possibly already cutoff-filtered) batch, so an incremental run only
-        rewrites the date partitions it touches.
+        run's derived batch (cutoff-filtered when every tier is incremental),
+        so an incremental run only rewrites the date partitions it touches.
 
         The last turn is the single row maximal by (turn_idx, ts) — turn_idx
         FIRST, matching the latency lag() window's ORDER BY turn_idx — so the
@@ -127,30 +155,25 @@ class RollupPipeline:
             .select(
                 "conv_id",
                 F.col("s.last_turn_idx").alias("turn_idx"),
-                F.lit(None).cast("string").alias("role"),
                 F.lit(None).cast("string").alias("text"),
-                F.lit(None).cast("string").alias("tool"),
                 F.col("s.last_ts").alias("ts"),
             )
         )
 
     # --- run ------------------------------------------------------------------
 
-    _COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    _DERIVED = ("conv_id", "turn_idx", "ts", "token_count", "latency_s")
 
     def incremental_metrics(self, transcripts: DataFrame, watermark: str) -> DataFrame:
-        """The incremental tier input: RAW input filtered at the watermark
-        DATE before deriving and rolling up — a plain `ts >=` predicate the
-        parquet scan prunes on (asserted at plan level in
-        tests/test_pipeline.py), since dynamic overwrite swaps whole p_date
-        partitions and the cutoff aligns to date granularity. The lag()
-        window gets its cross-cutoff context from one seed row per
-        conversation (convstate), dropped again before aggregation."""
-        cutoff_ts = F.to_timestamp(F.to_date(F.lit(watermark)))
-        src = transcripts.select(*self._COLS).where(F.col("ts") >= cutoff_ts)
+        """The incremental tier input: RAW rows from the watermark's DATE on
+        (dynamic overwrite swaps whole p_date partitions), derived with one
+        convstate seed row per conversation as lag() context, then dropped.
+        The pushed `ts >=` filter bounds the window and rollup, not the scan."""
+        after = F.col("ts") >= _cutoff(watermark)
+        src = transcripts.select("conv_id", "turn_idx", "text", "ts").where(after)
         seeds = self._seed_rows(watermark)
         batch = src if seeds is None else src.unionByName(seeds)
-        return with_derived_metrics(batch).where(F.col("ts") >= cutoff_ts)
+        return with_derived_metrics(batch).select(*self._DERIVED).where(after)
 
     def run(
         self,
@@ -173,110 +196,86 @@ class RollupPipeline:
             ).collect()[0]
             input_fingerprint = f"n={agg['n']}/min={agg['mn']}/max={agg['mx']}"
 
-        derived_full = None  # built lazily: full-recompute tiers only
         state = self.load_state()
         report: dict = {"snapshot_ids": {}, "skipped": [], "metrics": {}}
-        ran_full = False
-        min_cutoff: str | None = None
-
+        todo: dict[str, str | None] = {}  # tier -> previous watermark (None: full)
         for tier in tiers:
             entry = state["tiers"].get(tier)
             if entry and entry.get("fingerprint") == input_fingerprint:
                 report["skipped"].append(tier)
-                continue
-            snapshot_id = f"{tier}-{uuid.uuid4().hex[:12]}"
-            t0 = time.time()
-
-            prev_watermark = entry.get("watermark") if (entry and incremental) else None
-            if prev_watermark is not None:
-                d = self.incremental_metrics(transcripts, prev_watermark)
-                if min_cutoff is None or prev_watermark < min_cutoff:
-                    min_cutoff = prev_watermark
             else:
-                if derived_full is None:
-                    derived_full = with_derived_metrics(transcripts)
-                d = derived_full
-                ran_full = True
-            r = rollup(d, tier)
-            batch_rows = d.count() if debug_counts else None
-            out = (
-                r.withColumn("p_date", F.to_date("bucket_start"))
-                .repartition("p_date")
-                .sortWithinPartitions("conv_id", "metric", "bucket_start")
-            )
-            path = os.path.join(self.root, f"tier={tier}")
-            writer = out.write.partitionBy("p_date")
-            if prev_watermark is not None and os.path.exists(path):
-                # incremental: swap only the p_date partitions present in the
-                # batch. Per-write option (see _update_convstate) so full
-                # rewrites in the same session stay full replacements.
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-            writer.mode("overwrite").parquet(path)
-            wall = time.time() - t0
+                todo[tier] = entry.get("watermark") if (entry and incremental) else None
+        if not todo:
+            return report
 
-            written = self.spark.read.parquet(path)
-            part_stats = [
-                row.asDict()
-                for row in written.groupBy("p_date")
-                .agg(F.count("*").alias("rows"), F.max("bucket_start").alias("max_bucket"))
-                .orderBy("p_date")
-                .collect()
-            ]
-            watermark = str(max(p["max_bucket"] for p in part_stats)) if part_stats else None
-            total_rows = sum(p["rows"] for p in part_stats)
-            byte_size = sum(
-                os.path.getsize(os.path.join(dp, fn))
-                for dp, _, fns in os.walk(path)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
+        # one derived frame per kind, keyed by "incremental"; convstate reads the
+        # full one if any, else the batch (exactly the raw rows from the cutoff on)
+        marks = [w for w in todo.values() if w is not None]
+        n_full = len(todo) - len(marks)
+        frames = {}
+        if marks:
+            earliest = min(marks, key=datetime.fromisoformat)
+            frames[True] = self.incremental_metrics(transcripts, earliest)
+        if n_full:
+            frames[False] = with_derived_metrics(transcripts).select(*self._DERIVED)
+        readers = {True: len(marks) + (not n_full), False: n_full + 1}
+        frames = {k: f.persist(StorageLevel.MEMORY_AND_DISK) if readers[k] > 1 else f
+                  for k, f in frames.items()}
+        try:
+            for tier, prev_watermark in todo.items():
+                snapshot_id = f"{tier}-{uuid.uuid4().hex[:12]}"
+                t0 = time.time()
+                d = (frames[False] if prev_watermark is None
+                     else frames[True].where(F.col("ts") >= _cutoff(prev_watermark)))
+                obs = Observation()
+                out = (
+                    rollup(d, tier)
+                    .observe(obs, F.count("*").alias("rows"), F.max("bucket_start").alias("mx"))
+                    .withColumn("p_date", F.to_date("bucket_start"))
+                    .repartition("p_date")
+                    .sortWithinPartitions("conv_id", "metric", "bucket_start")
+                )
+                path = os.path.join(self.root, f"tier={tier}")
+                writer = out.write.partitionBy("p_date")
+                if prev_watermark is not None and os.path.exists(path):
+                    # incremental: swap only the p_date partitions present in
+                    # the batch. Per-write option (see _update_convstate) so
+                    # full rewrites in the same session stay full replacements.
+                    writer = writer.option("partitionOverwriteMode", "dynamic")
+                writer.mode("overwrite").parquet(path)
+                wall = round(time.time() - t0, 3)
 
-            lineage = {
-                "snapshot_id": snapshot_id,
-                "tier": tier,
-                "input_fingerprint": input_fingerprint,
-                "incremental_from": prev_watermark,
-                "rows": total_rows,
-                "bytes": byte_size,
-                "wall_sec": round(wall, 3),
-                "partitions": [
-                    {"p_date": str(p["p_date"]), "rows": p["rows"], "max_bucket": str(p["max_bucket"])}
-                    for p in part_stats
-                ],
-            }
-            with open(os.path.join(self.root, "lineage", f"{snapshot_id}.json"), "w") as f:
-                json.dump(lineage, f, indent=2)
+                written = obs.get
+                parts = _partition_stats(path)
+                metrics = {
+                    "rows": sum(p["rows"] for p in parts), "rows_written": written["rows"],
+                    "bytes": sum(p["bytes"] for p in parts), "wall_sec": wall,
+                    "incremental_from": prev_watermark,
+                }
+                lineage = {"version": 2, "snapshot_id": snapshot_id, "tier": tier,
+                           "input_fingerprint": input_fingerprint, **metrics, "partitions": parts}
+                with open(os.path.join(self.root, "lineage", f"{snapshot_id}.json"), "w") as f:
+                    json.dump(lineage, f, indent=2)
 
-            # commit AFTER data + lineage land (crash before this line →
-            # tier is simply recomputed on the next run)
-            state["tiers"][tier] = {
-                "fingerprint": input_fingerprint,
-                "snapshot_id": snapshot_id,
-                "watermark": watermark,
-                "rows": total_rows,
-                "bytes": byte_size,
-            }
-            self._commit_state(state)
-            report["snapshot_ids"][tier] = snapshot_id
-            report["metrics"][tier] = {
-                "rows": total_rows,
-                "bytes": byte_size,
-                "wall_sec": round(wall, 3),
-                "incremental_from": prev_watermark,
-            }
-            if batch_rows is not None:
-                report["metrics"][tier]["batch_rows"] = batch_rows
+                # commit AFTER data + lineage land (crash before this line →
+                # tier is simply recomputed on the next run)
+                state["tiers"][tier] = {
+                    "fingerprint": input_fingerprint, "snapshot_id": snapshot_id,
+                    "watermark": _later(prev_watermark, written["mx"]),
+                    "rows": metrics["rows"], "bytes": metrics["bytes"],
+                }
+                self._commit_state(state)
+                report["snapshot_ids"][tier] = snapshot_id
+                report["metrics"][tier] = metrics
+                if debug_counts:
+                    metrics["batch_rows"] = d.count()
 
-        # maintain the per-(conv, date) seed state for the NEXT incremental
-        # run; an all-incremental run only rewrites post-cutoff dates.
-        if report["snapshot_ids"]:
-            base = transcripts.select(*self._COLS)
-            if not ran_full and min_cutoff is not None:
-                cutoff_ts = F.to_timestamp(F.to_date(F.lit(min_cutoff)))
-                self._update_convstate(base.where(F.col("ts") >= cutoff_ts), incremental_dates=True)
-            else:
-                self._update_convstate(base, incremental_dates=False)
-
+            # maintain the per-(conv, date) seed state for the NEXT incremental
+            # run; an all-incremental run only rewrites post-cutoff dates.
+            self._update_convstate(frames[not n_full], incremental_dates=not n_full)
+        finally:
+            for df in frames.values():
+                df.unpersist()
         return report
 
     def read_tier(self, tier: str) -> DataFrame:
