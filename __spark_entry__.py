@@ -128,21 +128,9 @@ FROM l GROUP BY 1, 2, 3
 """
 
 
-def _q_rollup_1h_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1h tier via the one-raw-shuffle hierarchical path (1m partials with
-    value multisets → merged exactly). `sum`/`mean` are deterministic folds
-    over the sorted multiset (rollup._finalize_partials), so the oracle
-    reproduces them bit-for-bit with the same sorted fold. Single-tier
-    request → no partials are cached (nothing to unpersist)."""
-    from transcriptts.rollup import rollup_tiers_hierarchical
-
-    tiers = rollup_tiers_hierarchical(_transcripts(spark, sf_dir), tiers=("1h",))
-    return _round6(tiers["1h"], "sum", "mean", "min", "max", "p50", "p99")
-
-
 # Same rows as _sql_rollup(trunc), but sum/mean via the identical
-# sorted-multiset left fold the hierarchical/salted paths use (list_reduce
-# seeds with vs[1]; Spark's F.aggregate seeds 0.0 and 0.0+x == x exactly).
+# sorted-multiset left fold the salted path uses (list_reduce seeds with
+# vs[1]; Spark's F.aggregate seeds 0.0 and 0.0+x == x exactly).
 def _sql_rollup_fold(trunc: str) -> str:
     return f"""
 WITH {_T_SQL}, {_D_SQL}, {_LONG_SQL},
@@ -162,14 +150,20 @@ FROM g
 """
 
 
-def _q_rollup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1m tier via the skew-hardened two-phase salted path. Shares the
-    sorted-fold oracle with the hierarchical path: the value-hash proves the
-    salted merge equals a direct aggregation."""
-    from transcriptts.rollup import rollup_salted, with_derived_metrics
+def _q_rollup_salted(tier: str):
+    """One tier via the skew-hardened two-phase salted path. `sum`/`mean`
+    are deterministic folds over the sorted multiset, so the sorted-fold
+    oracle reproduces them bit-for-bit and the value-hash proves the salted
+    merge equals a direct aggregation; at 1h each bucket merges the salts
+    of up to 60 minutes of turns."""
 
-    r = rollup_salted(with_derived_metrics(_transcripts(spark, sf_dir)), "1m", salt_buckets=8)
-    return _round6(r, "sum", "mean", "min", "max", "p50", "p99")
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from transcriptts.rollup import rollup_salted, with_derived_metrics
+
+        r = rollup_salted(with_derived_metrics(_transcripts(spark, sf_dir)), tier, salt_buckets=8)
+        return _round6(r, "sum", "mean", "min", "max", "p50", "p99")
+
+    return q
 
 
 def _q_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1765,12 +1759,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # r04-green queries over unchanged files sit at the tail, where a cap
     # skip costs one round of freshness at most.
     return {
-        # (a) NEW in round 5 — never driver-verified
+        # (a) never driver-verified: the round-5 rows and the coarse-tier
+        # salted row
         "nelder_mead_quadratic": _q_nelder_mead_quadratic,
         "media_video_features": _q_media_video_features,
         "polyfit_deg2": _q_polyfit_deg2,
         "media_image_features": _q_media_image_features,
         "grid_search_holt": _q_grid_search_holt,
+        "rollup_1h_salted": _q_rollup_salted("1h"),
         # (b) source files touched in round 5: datapipe.py (LSH bucket cap /
         # single-exchange rewrite), multimodal.py (PPM image path),
         # stats.py (polyfit addition — re-verify its pre-existing queries)
@@ -1796,8 +1792,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (c) oldest green rows (r02/r03), unchanged files — rotate back in
         "downsample_k4": _q_downsample,
         "linear_forecast": _q_linear_forecast,
-        "rollup_1h_hierarchical": _q_rollup_1h_hierarchical,
-        "rollup_1m_salted": _q_rollup_salted,
+        "rollup_1m_salted": _q_rollup_salted("1m"),
         "sma_w5_mirror": _q_sma_mirror,
         "sma_w5_periodic": _q_sma_periodic,
         "holt_damped_forecast": _q_holt_damped,
@@ -1847,7 +1842,7 @@ def oracle_sql() -> dict[str, str]:
         "rollup_1m": _sql_rollup("minute"),
         "rollup_1h": _sql_rollup("hour"),
         "rollup_1d": _sql_rollup("day"),
-        "rollup_1h_hierarchical": _sql_rollup_fold("hour"),
+        "rollup_1h_salted": _sql_rollup_fold("hour"),
         "rollup_1m_salted": _sql_rollup_fold("minute"),
         "downsample_k4": _SQL_DOWNSAMPLE,
         "segment_stats_k8": _SQL_SEGMENT_STATS,

@@ -83,10 +83,10 @@ def spark_submit(
         "--conf", f"spark.sql.shuffle.partitions={shuffle_partitions}",
         # Pin the decomposition for real: AQE's partition coalescing shrinks
         # small shuffles to a handful of reduce tasks (advisory 64MB), which
-        # starves the wide leg — measured: the approx-percentile job (smaller
-        # shuffle payload) ran SLOWER at 8 cores than the exact job because
-        # its 32 reduce partitions coalesced to fewer waves than cores. Both
-        # legs must run the declared partition count.
+        # starves the wide leg — measured: a sketch-percentile variant of
+        # the job (smaller shuffle payload) ran SLOWER at 8 cores than the
+        # exact job because its 32 reduce partitions coalesced to fewer
+        # waves than cores. Both legs must run the declared partition count.
         "--conf", "spark.sql.adaptive.coalescePartitions.enabled=false",
         # The scan stage must also have enough splits: the pre-generated
         # input is ~600MB in ~8MB files, so the default 128MB
@@ -221,11 +221,6 @@ def main() -> None:
         "partitions/cores task waves; too few waves -> straggler tail idle "
         "dominates the wide leg and reads as poor scaling")
     ap.add_argument(
-        "--percentile-mode", choices=("exact", "approx"), default="exact",
-        help="rollup percentile path: exact (reference-parity interpolating "
-        "percentiles, default) or approx (mergeable sketches — the 100-TB "
-        "configuration; far less allocation/bus traffic per bucket)")
-    ap.add_argument(
         "--out", default=os.path.join("BENCH", "BASELINE.md"),
         help="report path relative to the repo root (use a different file for "
         "auxiliary datapoints, e.g. a larger-input run, so the headline "
@@ -287,8 +282,7 @@ def main() -> None:
             pre_load = load1()
             r = spark_submit(
                 f"local[{cores}]", zip_path,
-                ["bench", "--input", data_path, "--passes", str(n_passes),
-                 "--percentile-mode", args.percentile_mode],
+                ["bench", "--input", data_path, "--passes", str(n_passes)],
                 shuffle_parts,
                 pin_cpus=0 if args.no_pin else cores,
                 pretouch=not args.no_pretouch,
@@ -397,7 +391,7 @@ def main() -> None:
 
 Sandbox substitution for a real cluster (per task brief): the same tiered
 rollup job (1m/1h/1d continuous aggregates over {lo['turns']:,} synthetic
-transcript turns, percentile_mode={args.percentile_mode}, fully
+transcript turns, exact percentiles, fully
 materialized via noop sink) run via
 `spark-submit --py-files /tmp/transcriptts.zip` at two parallelism levels
 (N={args.low} and 4N={args.high} cores) on the same pre-generated parquet

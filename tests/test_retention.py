@@ -118,9 +118,9 @@ def test_melt_unmelt_roundtrip(spark, pipeline):
 
 
 def test_null_stats_roundtrip_as_null(spark, pipeline):
-    """NULL stat values (percentile_mode='approx' coarse tiers) must come
-    back NULL, not NaN: melt drops NULL points and the unmelt pivot restores
-    the absence as NULL."""
+    """NULL stat values (every stat column is nullable, whoever wrote the
+    tier) must come back NULL, not NaN: melt drops NULL points and the
+    unmelt pivot restores the absence as NULL."""
     tier = pipeline.read_tier("1d").drop("p_date")
     # null out percentiles on a deterministic subset
     tier = tier.withColumn(

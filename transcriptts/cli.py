@@ -46,12 +46,6 @@ def main(argv=None) -> int:
         help="timed steady-state passes; min wall is reported (the sandbox "
         "host has noisy-neighbor variance up to 2x — min ~= quiet-host time)",
     )
-    p_bench.add_argument("--persist-derived", action="store_true")
-    p_bench.add_argument(
-        "--percentile-mode", choices=("exact", "approx"), default="exact",
-        help="exact = interpolating percentiles (reference parity, default); "
-        "approx = mergeable Greenwald-Khanna sketches — the documented 100-TB "
-        "configuration (map-side partials MERGE, no per-bucket sorted buffers)")
 
     args = ap.parse_args(argv)
 
@@ -86,13 +80,6 @@ def main(argv=None) -> int:
         print(json.dumps(report))
 
     elif args.cmd == "bench":
-        # Per-tier wide aggregation (rollup_tiers), NOT the hierarchical
-        # array-merge path: measured on 16M turns, three lean built-in
-        # percentile shuffles beat one shuffle that materializes + persists
-        # per-bucket value arrays (24.6s vs 51.3s at local[32]; the array
-        # path also degrades badly under memory pressure at low core counts).
-        # rollup_tiers_hierarchical stays the right shape when raw-scan IO
-        # dominates (remote storage), which a warm local page cache hides.
         from transcriptts.rollup import rollup_tiers
 
         df = spark.read.parquet(args.input)
@@ -106,11 +93,7 @@ def main(argv=None) -> int:
             # can fill the idle slots of one job's straggler wave / planning
             # gap with another job's tasks — dead time that otherwise grows
             # with core count and erodes measured scaling efficiency
-            tiers = rollup_tiers(
-                df,
-                persist_derived=args.persist_derived,
-                percentile_mode=args.percentile_mode,
-            )
+            tiers = rollup_tiers(df)
             with ThreadPoolExecutor(max_workers=len(tiers)) as ex:
                 futs = [
                     ex.submit(lambda t=t: t.write.format("noop").mode("overwrite").save())
@@ -118,8 +101,6 @@ def main(argv=None) -> int:
                 ]
                 for f in futs:
                     f.result()
-            if args.persist_derived:
-                spark.catalog.clearCache()
 
         # untimed warmup pass: JIT/codegen compilation and page cache, so the
         # timed passes measure steady-state throughput at both core counts

@@ -82,13 +82,13 @@ def melt_stats(tier_df: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFr
     each stat a separate compressible series without widening the blob
     schema. `cnt` is a bigint but < 2^53, so the double round-trip is exact.
 
-    NULL stat values (e.g. the NULL coarse percentiles a
-    percentile_mode='approx' hierarchical tier can carry) are DROPPED here
-    rather than encoded: Gorilla packs IEEE doubles, so a NULL would come
-    back as NaN. An absent point pivots back to NULL in unmelt_stats, which
-    keeps the roundtrip exact for nullable stats too (a bucket always keeps
-    at least its cnt point — counts are never NULL — so no bucket ever
-    disappears entirely)."""
+    NULL stat values are DROPPED here rather than encoded: every stat
+    column is nullable, and any writer of a tier table may leave one NULL.
+    Gorilla packs IEEE doubles, so a NULL would come back as NaN. An absent
+    point pivots back to NULL in unmelt_stats, which keeps the roundtrip
+    exact for nullable stats too (a bucket always keeps at least its cnt
+    point — counts are never NULL — so no bucket ever disappears
+    entirely)."""
     n = len(stats)
     pairs = ", ".join(f"'{s}', cast(`{s}` as double)" for s in stats)
     return (

@@ -5,6 +5,10 @@ Re-expresses the reference's positional segment statistics
 time-bucket aggregates over real timestamps, generalized with count / p50 /
 p99 and the inter-turn latency metric per the north rule.
 
+One tier engine: ``rollup(df, tier)`` builds one tier and ``rollup_tiers(df)``
+builds 1m/1h/1d from one derived projection; ``rollup_salted`` is the exact
+escape hatch for a single hot bucket.
+
 Execution shape (scale notes):
 - everything is built-in Catalyst aggregates — count/sum/min/max/avg get
   map-side partial aggregation for free, so the shuffle carries one partial
@@ -110,10 +114,7 @@ def _long_metrics(df: DataFrame) -> DataFrame:
     )
 
 
-def rollup(
-    df: DataFrame, tier: str = "1m", percentile_mode: str = "exact",
-    approx_accuracy: int = 10000,
-) -> DataFrame:
+def rollup(df: DataFrame, tier: str = "1m") -> DataFrame:
     """One retention tier of continuous aggregates from raw turns.
 
     df must already carry token_count/latency_s (see with_derived_metrics).
@@ -129,37 +130,23 @@ def rollup(
     - the long output shape is produced AFTER aggregation by exploding a
       2-struct array on the (small) aggregated rows.
 
-    percentile_mode:
-    - 'exact' (default): Spark's exact interpolating percentile — matches
-      the reference's median semantics bit-for-bit (even n → mean of the
-      two middle values) and is what every oracle row verifies. Buffers
-      each bucket's values, so bucket size bounds task memory.
-    - 'approx': percentile_approx (Greenwald-Khanna mergeable sketch,
-      rank error <= 1/approx_accuracy). The 100-TB escape hatch when a
-      single bucket's value multiset no longer fits an aggregation buffer
-      (hour/day tiers over pathological conversations): sketch state is
-      O(accuracy * log n) per group regardless of bucket size, and
-      map-side partials merge instead of concatenating. Not bit-exact —
-      keep it OFF anywhere reference parity is asserted.
+    Percentiles are Spark's exact interpolating ``percentile``: they match
+    the reference's median semantics bit-for-bit (even n → mean of the two
+    middle values) and are what every oracle row verifies. The buffer holds
+    each bucket's values, so bucket size bounds task memory; a single
+    pathological bucket is ``rollup_salted``'s job.
     """
-    if percentile_mode not in ("exact", "approx"):
-        raise ValueError(f"percentile_mode must be 'exact' or 'approx', got {percentile_mode!r}")
     duration = TIERS[tier]
     ps = F.array(F.lit(0.5), F.lit(0.99))
     aggs = []
     for m in METRICS:
         v = F.col(m).cast("double")
-        pct = (
-            F.percentile(v, ps)
-            if percentile_mode == "exact"
-            else F.percentile_approx(v, ps, F.lit(approx_accuracy)).cast("array<double>")
-        )
         aggs += [
             F.count(v).alias(f"{m}_cnt"),
             F.sum(v).alias(f"{m}_sum"),
             F.min(v).alias(f"{m}_min"),
             F.max(v).alias(f"{m}_max"),
-            pct.alias(f"{m}_pct"),
+            F.percentile(v, ps).alias(f"{m}_pct"),
         ]
     wide = df.groupBy("conv_id", F.window("ts", duration).alias("w")).agg(*aggs)
     per_metric = F.array(
@@ -189,34 +176,6 @@ def rollup(
             F.col("s.max").alias("max"),
             F.col("s.pct")[0].alias("p50"),
             F.col("s.pct")[1].alias("p99"),
-        )
-    )
-
-
-def _rollup_from_long(long_df: DataFrame, tier: str) -> DataFrame:
-    duration = TIERS[tier]
-    return (
-        long_df.groupBy("conv_id", F.window("ts", duration).alias("w"), "metric")
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.avg("value").alias("mean"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.percentile("value", F.lit(0.5)).alias("p50"),
-            F.percentile("value", F.lit(0.99)).alias("p99"),
-        )
-        .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_start"),
-            "metric",
-            "cnt",
-            "sum",
-            "mean",
-            "min",
-            "max",
-            "p50",
-            "p99",
         )
     )
 
@@ -254,12 +213,14 @@ def rollup_salted(df: DataFrame, tier: str = "1m", salt_buckets: int = 8) -> Dat
         F.sort_array(F.flatten(F.collect_list("p_vals"))).alias("vals"),
     )
 
-    # sum/mean via the sorted-multiset fold (see _finalize_partials): the
-    # per-salt partial-sum re-addition order depends on the shuffle, so the
-    # deterministic fold makes the salted and hierarchical paths mutually
-    # bit-identical (and oracle-reproducible). The direct rollup() still
-    # sums via F.sum, whose partial-aggregation order is shuffle-dependent —
-    # agreement with IT holds only to ulp (its oracle rounds to 6 dp).
+    # sum/mean via a left fold over the sorted multiset: fp addition is not
+    # associative and the per-salt partial-sum re-addition order depends on
+    # the shuffle, so the fold makes sum/mean a pure function of the
+    # bucket's values — the same number every run, at every tier, and the
+    # same number the oracle's sorted fold computes. The direct rollup()
+    # still sums via F.sum, whose partial-aggregation order is
+    # shuffle-dependent — agreement with IT holds only to ulp (its oracle
+    # rounds to 6 dp).
     ssum = F.aggregate(F.col("vals"), F.lit(0.0), lambda acc, x: acc + x)
     return merged.select(
         "conv_id",
@@ -275,51 +236,6 @@ def rollup_salted(df: DataFrame, tier: str = "1m", salt_buckets: int = 8) -> Dat
     )
 
 
-def coarsen_partials(fine: DataFrame, tier: str) -> DataFrame:
-    """Hierarchical re-aggregation: 1h/1d moments from 1m partials.
-
-    cnt/sum/min/max compose exactly; mean = Σsum/Σcnt. Exact percentiles do
-    NOT compose from per-bucket percentiles, so this path emits p50/p99 as
-    NULL — callers that need exact coarse-tier percentiles use ``rollup``
-    over raw (one extra scan) or the salted array-merge path. This is the
-    cheap maintenance path at 100 TB: it never rereads raw data.
-    """
-    from .schema import TIER_SECONDS
-
-    secs = TIER_SECONDS[tier]
-    in_type = dict(fine.dtypes)["bucket_start"]
-    bucket = (
-        F.timestamp_seconds(
-            # floor division (not truncate-toward-zero) so pre-1970 negative
-            # epochs land in the same bucket as F.window's tumbling windows
-            F.floor(F.unix_seconds(F.col("bucket_start").cast("timestamp")) / secs).cast("long") * secs
-        )
-        .cast(in_type)  # keep NTZ inputs NTZ (UTC session → same wall clock)
-        .alias("bucket_start")
-    )
-    return (
-        fine.groupBy("conv_id", bucket, "metric")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-        .select(
-            "conv_id",
-            "bucket_start",
-            "metric",
-            "cnt",
-            "sum",
-            (F.col("sum") / F.col("cnt")).alias("mean"),
-            "min",
-            "max",
-            F.lit(None).cast("double").alias("p50"),
-            F.lit(None).cast("double").alias("p99"),
-        )
-    )
-
-
 def _exact_pct(vals: Column, cnt: Column, p: float) -> Column:
     """Exact percentile with linear interpolation on a SORTED array.
 
@@ -330,7 +246,7 @@ def _exact_pct(vals: Column, cnt: Column, p: float) -> Column:
     Uses the BUILTIN's exact two-sided form `(hi-pos)*a + (pos-lo)*b`
     (Percentile.scala getPercentile) rather than `a + frac*(b-a)`: the two
     differ in the last ulp, and matching the builtin keeps every percentile
-    in the engine — direct, salted, or hierarchical — bit-identical."""
+    in the engine — direct or salted — bit-identical."""
     pos = F.lit(p) * (cnt - 1).cast("double")
     lo = F.floor(pos)
     hi = F.ceil(pos)
@@ -339,197 +255,14 @@ def _exact_pct(vals: Column, cnt: Column, p: float) -> Column:
     return F.when(hi == lo, a).otherwise((hi - pos) * a + (pos - lo) * b)
 
 
-def _partials_1m(derived: DataFrame) -> DataFrame:
-    """ONE wide aggregation of raw turns into per-(conv, 1m-bucket, metric)
-    partials that carry the bucket's full (unsorted) value multiset.
-
-    This is the only shuffle that ever sees raw turns in the hierarchical
-    tier pipeline: every coarser tier re-aggregates these partials.
-    """
-    aggs = []
-    for m in METRICS:
-        v = F.col(m).cast("double")
-        aggs += [
-            F.count(v).alias(f"{m}_cnt"),
-            F.min(v).alias(f"{m}_min"),
-            F.max(v).alias(f"{m}_max"),
-            F.collect_list(v).alias(f"{m}_vals"),
-        ]
-    wide = derived.groupBy("conv_id", F.window("ts", TIERS["1m"]).alias("w")).agg(*aggs)
-    per_metric = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("metric"),
-                F.col(f"{m}_cnt").alias("cnt"),
-                F.col(f"{m}_min").alias("min"),
-                F.col(f"{m}_max").alias("max"),
-                F.col(f"{m}_vals").alias("vals"),
-            )
-            for m in METRICS
-        ]
-    )
-    return (
-        wide.select("conv_id", F.col("w.start").alias("bucket_start"), F.explode(per_metric).alias("s"))
-        .where(F.col("s.cnt") > 0)
-        .select("conv_id", "bucket_start", "s.metric", "s.cnt", "s.min", "s.max", "s.vals")
-    )
-
-
-def _coarsen_partials_exact(partials: DataFrame, tier: str) -> DataFrame:
-    """Merge fine partials into coarser buckets. Moments compose exactly;
-    the value multisets concatenate — so the coarse tier's exact percentiles
-    are computable without ever touching raw turns again."""
-    from .schema import TIER_SECONDS
-
-    secs = TIER_SECONDS[tier]
-    in_type = dict(partials.dtypes)["bucket_start"]
-    bucket = (
-        F.timestamp_seconds(
-            # floor division (not truncate-toward-zero) so pre-1970 negative
-            # epochs land in the same bucket as F.window's tumbling windows
-            F.floor(F.unix_seconds(F.col("bucket_start").cast("timestamp")) / secs).cast("long") * secs
-        )
-        .cast(in_type)
-        .alias("bucket_start")
-    )
-    return partials.groupBy("conv_id", bucket, "metric").agg(
-        F.sum("cnt").alias("cnt"),
-        F.min("min").alias("min"),
-        F.max("max").alias("max"),
-        F.flatten(F.collect_list("vals")).alias("vals"),
-    )
-
-
-def _finalize_partials(partials: DataFrame) -> DataFrame:
-    """Partials (with value arrays) → ROLLUP_SCHEMA rows (exact p50/p99).
-
-    `sum` is a left fold over the SORTED value multiset rather than a
-    re-addition of per-fine-bucket partial sums: fp addition is not
-    associative, so the partial-sum order (which depends on shuffle
-    nondeterminism and differs from any direct aggregation) could land a
-    1-ulp away from a direct sum and straddle a downstream rounding
-    boundary. Folding the sorted multiset makes `sum`/`mean` a pure
-    function of the bucket's value multiset — the same number every run
-    and the same number any other engine computes with the same fold.
-    """
-    sorted_vals = F.sort_array(F.col("vals"))
-    ssum = F.aggregate(sorted_vals, F.lit(0.0), lambda acc, x: acc + x)
-    return partials.select(
-        "conv_id",
-        "bucket_start",
-        "metric",
-        "cnt",
-        ssum.alias("sum"),
-        (ssum / F.col("cnt")).alias("mean"),
-        "min",
-        "max",
-        _exact_pct(sorted_vals, F.col("cnt"), 0.5).alias("p50"),
-        _exact_pct(sorted_vals, F.col("cnt"), 0.99).alias("p99"),
-    )
-
-
-class HierarchicalRollup(dict):
-    """Tier name → finalized DataFrame, plus an unpersist handle for the
-    intermediate partials cached by rollup_tiers_hierarchical."""
-
-    def __init__(self, tiers: dict[str, DataFrame], persisted: list[DataFrame]):
-        super().__init__(tiers)
-        self.persisted = persisted
-
-    def unpersist(self) -> None:
-        for p in self.persisted:
-            p.unpersist()
-        self.persisted = []
-
-
-def rollup_tiers_hierarchical(
-    df: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d"), persist: bool = True
-) -> "HierarchicalRollup":
-    """All three tiers from ONE shuffle of raw turns (the 100-TB plan shape).
-
-    ``rollup_tiers`` re-aggregates raw rows once per tier — 3 wide shuffles
-    of the full table. Here raw turns are shuffled exactly once into 1m
-    partials that keep each bucket's value multiset; 1h buckets merge 60 1m
-    partials, 1d buckets merge 24 1h partials. cnt/sum/min/max compose
-    algebraically, and exact percentiles come from the merged multiset
-    (identical values → identical interpolation → identical p50/p99; verified
-    against the per-tier path in tests/test_rollup.py).
-
-    At cluster scale this matters twice: the raw table (with its wide text
-    column) is scanned once instead of three times, and the two coarse tiers
-    shuffle only per-minute partial rows (~raw/row-density), not raw turns.
-    Task memory is bounded by bucket size per (conv, bucket, metric) — a
-    pathological single bucket is the salted path's job (rollup_salted).
-    """
-    derived = with_derived_metrics(df).select("conv_id", "ts", "token_count", "latency_s")
-    p1m = _partials_1m(derived)
-    persisted: list[DataFrame] = []
-    # The 1m partials feed up to three consumers (1m finalize, 1h,
-    # transitively 1d); without a persist Spark would recompute the raw
-    # shuffle per consumer. With a single requested tier there is exactly
-    # one consumer per stage, so nothing is cached (and nothing leaks).
-    multi = len(tiers) > 1
-    if persist and multi:
-        p1m = p1m.persist()
-        persisted.append(p1m)
-    p1h = _coarsen_partials_exact(p1m, "1h")
-    if persist and multi and "1d" in tiers and "1h" in tiers:
-        p1h = p1h.persist()
-        persisted.append(p1h)
-    p1d = _coarsen_partials_exact(p1h, "1d")
-    out = {"1m": _finalize_partials(p1m), "1h": _finalize_partials(p1h), "1d": _finalize_partials(p1d)}
-    return HierarchicalRollup({t: out[t] for t in tiers}, persisted)
-
-
-def rollup_tiers_union(df: DataFrame) -> DataFrame:
-    """All three tiers as ONE DataFrame (extra leading ``tier`` column) in
-    one action — convenient for writing a single partitioned-by-tier sink.
-    Same rows as rollup_tiers, exact percentiles everywhere. Measured wall
-    parity with three separate actions on a warm page cache (33.8s vs 34.1s,
-    16M turns, local[8]): the shared scan subtree is cheap relative to the
-    per-tier window + aggregation, so exchange reuse buys little here.
-    """
-    derived = with_derived_metrics(df).select("conv_id", "ts", "token_count", "latency_s")
-    out = None
-    for tier in ("1m", "1h", "1d"):
-        t = rollup(derived, tier).select(F.lit(tier).alias("tier"), "*")
-        out = t if out is None else out.unionByName(t)
-    return out
-
-
-def rollup_tiers(
-    df: DataFrame, exact_percentiles: bool = True, persist_derived: bool = False,
-    percentile_mode: str = "exact",
-) -> dict[str, DataFrame]:
+def rollup_tiers(df: DataFrame) -> dict[str, DataFrame]:
     """All three retention tiers from one raw transcripts DataFrame.
 
-    exact_percentiles=True → each tier is a wide aggregation over the
-    derived rows (percentiles exact everywhere; one shuffle per tier).
-    False → 1m exact, 1h/1d via coarsen_partials (coarse percentiles NULL —
-    the cheapest maintenance path: no re-shuffle of raw values at all).
-
-    percentile_mode='approx' swaps every tier's percentile for the
-    Greenwald-Khanna mergeable sketch (see rollup()) — the bounded-memory
-    path for pathological buckets at 100 TB.
-
-    persist_derived caches the slim 4-column derived projection so the raw
-    table (with its wide `text` column) is scanned once — worth it when raw
-    IO dominates (e.g. 100 TB remote storage); on a warm local page cache
-    the rescan is cheaper than the cache materialization, hence default off.
+    Each tier is one wide aggregation over the derived rows (``rollup``):
+    exact percentiles everywhere, one shuffle per tier.
     """
     derived = with_derived_metrics(df).select("conv_id", "ts", "token_count", "latency_s")
-    if persist_derived:
-        from pyspark.storagelevel import StorageLevel
-
-        derived = derived.persist(StorageLevel.MEMORY_AND_DISK)
-    out = {"1m": rollup(derived, "1m", percentile_mode=percentile_mode)}
-    if exact_percentiles:
-        out["1h"] = rollup(derived, "1h", percentile_mode=percentile_mode)
-        out["1d"] = rollup(derived, "1d", percentile_mode=percentile_mode)
-    else:
-        out["1h"] = coarsen_partials(out["1m"], "1h")
-        out["1d"] = coarsen_partials(out["1h"], "1d")
-    return out
+    return {tier: rollup(derived, tier) for tier in ("1m", "1h", "1d")}
 
 
 # ---------------------------------------------------------------------------
