@@ -3,7 +3,7 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query min sec...}, "sf": <sf>, "turns_per_sec": ...,
+   "queries": {"tier_pipeline": <min sec>, ...per-query min sec...}, "sf": <sf>, "turns_per_sec": ...,
    "passes": N, "walls": {"tier_pipeline": [...], "<query>": [...]},
    "nproc": <usable cores>}
 "walls" holds every timed pass's wall (sec), in pass order.
@@ -22,8 +22,10 @@ Env knobs:
                       passes minutes apart.)
 
 The tier pipeline is the north-rule headline: synth transcripts are written
-to parquet once (untimed), then all three retention tiers are computed and
-fully materialized (noop sink — forces every aggregate, writes nothing).
+to parquet once (untimed) and cached, then ``transcriptts.cli.time_tiers``
+computes all three retention tiers and fully materializes them (noop sink —
+forces every aggregate, writes nothing): one untimed warm-up pass, then the
+timed passes.
 """
 
 from __future__ import annotations
@@ -57,8 +59,6 @@ def main() -> None:
         },
     )
 
-    timings: dict[str, float] = {}
-
     # --- synthetic transcript tier pipeline (headline) ---------------------
     # ~12 mean turns/conv (plus hot tail) → conv count for the turn target
     n_convs = max(100, int(n_turns_target / 24))
@@ -67,35 +67,19 @@ def main() -> None:
         synth_transcripts_spark(
             spark, n_convs=n_convs, metronome_turns=86400, slices=cpus * 4
         ).write.mode("overwrite").parquet(synth_path)
-    tdf = spark.read.parquet(synth_path)
-    n_turns = tdf.count()
 
     passes = max(1, int(os.environ.get("BENCH_PASSES", 3)))
 
-    from transcriptts.rollup import rollup_tiers
+    from transcriptts.cli import time_tiers
 
-    tdf = tdf.cache()
-    tdf.count()  # materialize the cache untimed
-    # tier_total = min over passes of the full 3-tier wall (the throughput
-    # protocol, comparable across rounds); per-tier entries are the min per
-    # tier across passes (a noise burst inside the best-total pass would
-    # otherwise be reported as that tier's cost).
-    walls: dict[str, list[float]] = {"tier_pipeline": []}
-    per_tier_min: dict[str, float] = {}
-    for _ in range(passes):
-        t0 = time.time()
-        for name, df in rollup_tiers(tdf).items():
-            t1 = time.time()
-            materialize(df)
-            w = round(time.time() - t1, 3)
-            key = f"tier_{name}"
-            if key not in per_tier_min or w < per_tier_min[key]:
-                per_tier_min[key] = w
-        walls["tier_pipeline"].append(round(time.time() - t0, 3))
-    tier_total = min(walls["tier_pipeline"])
-    timings.update(per_tier_min)
+    # tier_pipeline = min over passes of the full 3-tier wall (the
+    # throughput protocol, comparable across rounds); time_tiers' untimed
+    # count and warm-up pass materialize the cache
+    tdf = spark.read.parquet(synth_path).cache()
+    tiers = time_tiers(tdf, passes)
     tdf.unpersist()
-    turns_per_sec = n_turns * 3 / tier_total  # turns rolled into 3 tiers
+    walls: dict[str, list[float]] = {"tier_pipeline": tiers["wall_sec_all"]}
+    timings: dict[str, float] = {"tier_pipeline": tiers["wall_sec"]}
 
     # --- driver-contract queries on testdata -------------------------------
     import __spark_entry__ as entrymod
@@ -117,9 +101,9 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "bench_turns": n_turns,
-                "tier_pipeline_sec": round(tier_total, 3),
-                "turns_per_sec": round(turns_per_sec, 1),
+                "bench_turns": tiers["turns"],
+                "tier_pipeline_sec": tiers["wall_sec"],
+                "turns_per_sec": tiers["turns_per_sec"],
                 "cpus": cpus,
                 "passes": passes,
                 "walls": walls,

@@ -6,7 +6,8 @@ parallelism levels of the SAME job on the SAME input (N and 4N cores, per
 the task brief). Each level runs in its own spark-submit process with
 --py-files. PAIRED protocol: each round runs low then high back-to-back and
 yields one efficiency ratio; the reported figure is the median over rounds
-(the host's noisy neighbors make unpaired comparisons a lottery).
+(the host's noisy neighbors make unpaired comparisons a lottery). Each leg
+times the tier job with `cli.py bench`, i.e. `transcriptts.cli.time_tiers`.
 
 Writes the report to --out (default BENCH/BASELINE.md) and prints one JSON
 line.
@@ -19,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -47,35 +49,39 @@ def _heap_cap_gb() -> int | None:
         return None
 
 
+# JVM heap per core on every leg: heap scales WITH the leg's core count.
+# The substitution is "same per-executor resources, 4x executors", so
+# per-core memory must be EQUAL across legs — Spark's per-task memory share
+# (unified memory / concurrent tasks) then matches. A fixed heap for both
+# legs hands the narrow leg 4x the per-core memory a real 2-core executor
+# would own, and (measured) a big pretouched heap actively TAXES a 2-core
+# leg: 24M exact low legs ran ~230s with a 24g heap vs ~173s with a
+# right-sized one — GC/TLB work over a 24g committed heap on 2 cores.
+# Sizing note: the 24M exact job peaks well under 6g at 2 concurrent tasks.
+HEAP_PER_CORE_GB = 3
+
+
 def spark_submit(
-    master: str, zip_path: str, cli_args: list[str], shuffle_partitions: int,
-    pin_cpus: int = 0, pretouch: bool = True, heap_gb: int = 24,
+    cores: int, zip_path: str, cli_args: list[str], shuffle_partitions: int,
+    heap_gb: int, timed: bool = True,
 ) -> dict:
+    """Run cli.py under spark-submit at local[cores]. A timed leg is pinned
+    to `cores` CPUs and pretouches its heap; the untimed synth run does
+    neither."""
     os.makedirs("/dev/shm/spark-local", exist_ok=True)
-    # clamp the heap to ~60% of available RAM: a pretouched -Xms heap larger
-    # than that risks JVM start failure or host OOM (the same RAM backs the
-    # /dev/shm shuffle dir), e.g. --low 8 --high 32 at 3g/core asks for 96g
-    # of the 125GB host. NOTE: this is a last-resort per-call defense; the
-    # paired protocol clamps --heap-per-core ONCE in main() so both legs
-    # keep EQUAL per-core heap even when the cap binds.
-    cap_gb = _heap_cap_gb()
-    if cap_gb is not None and heap_gb > cap_gb:
-        print(f"spark_submit: clamping heap {heap_gb}g -> {cap_gb}g "
-              f"(60% of MemAvailable)", file=sys.stderr)
-        heap_gb = cap_gb
     cmd = []
-    if pin_cpus:
+    if timed:
         # Pin the whole process tree (JVM + Python workers) to exactly
-        # `pin_cpus` host CPUs. Without affinity, a local[2] JVM still fans
+        # `cores` host CPUs. Without affinity, a local[2] JVM still fans
         # its GC/JIT/netty threads across all 32 host cores — the low leg
         # gets ~30 free helper cores a real 2-core executor would not have,
         # which biases measured scaling efficiency DOWN. Affinity makes each
         # leg a faithful N-core executor (availableProcessors follows the
         # mask, so GC/JIT pools self-size to N as on a real N-core box).
-        cmd += ["taskset", "-c", f"0-{pin_cpus - 1}"]
+        cmd += ["taskset", "-c", f"0-{cores - 1}"]
     cmd += [
         "spark-submit",
-        "--master", master,
+        "--master", f"local[{cores}]",
         # IDENTICAL work decomposition at both parallelism levels: fixed
         # shuffle-partition count (4x the high core count) so the efficiency
         # ratio measures parallel speedup, not a partitioning change.
@@ -96,19 +102,9 @@ def spark_submit(
         "--conf", "spark.sql.files.maxPartitionBytes=16m",
         "--conf", "spark.ui.enabled=false",
         "--conf", "spark.ui.showConsoleProgress=false",
-        # Heap scales WITH the leg's core count (3g/core by default): the
-        # substitution is "same per-executor resources, 4x executors", so
-        # per-core memory must be EQUAL across legs — Spark's per-task
-        # memory share (unified memory / concurrent tasks) then matches.
-        # A fixed heap for both legs hands the narrow leg 4x the per-core
-        # memory a real 2-core executor would own, and (measured) a big
-        # pretouched heap actively TAXES a 2-core leg: 24M exact low legs
-        # ran ~230s with a 24g heap vs ~173s with a right-sized one —
-        # GC/TLB work over a 24g committed heap on 2 cores. Sizing note:
-        # the 24M exact job peaks well under 6g at 2 concurrent tasks.
         "--conf", f"spark.driver.memory={heap_gb}g",
     ]
-    if pretouch:
+    if timed:
         # Commit + fault the whole heap at startup (untimed) instead of
         # growing it lazily during the timed passes. This sandbox's
         # first-touch page faults are slow and the fault path is kernel-side
@@ -186,34 +182,16 @@ def main() -> None:
     ap.add_argument("--max-load", type=float, default=3.0,
                     help="1-min load-average gate before each round (0 disables)")
     ap.add_argument("--passes", type=int, default=1,
-                    help="timed passes for the LOW leg")
-    ap.add_argument(
-        "--passes-high", type=int, default=None,
-        help="timed passes for the HIGH leg (default: factor x passes, so both "
-        "legs get ~equal wall-clock exposure; a short high leg sitting inside "
-        "one noise burst would otherwise bias the ratio down)")
+                    help="timed passes for the LOW leg; the high leg runs factor x "
+                    "passes, so both legs get ~equal wall-clock exposure (a short "
+                    "high leg sitting inside one noise burst would otherwise bias "
+                    "the ratio down)")
     # defaults match the documented 2-vs-8 protocol (every committed figure
     # uses it); 8/32 with per-core heaps would pretouch a 96g -Xms heap on a
-    # 125GB host that also backs the /dev/shm shuffle dir — see the clamp in
-    # spark_submit as the second line of defense
+    # 125GB host that also backs the /dev/shm shuffle dir — see the heap
+    # clamp below
     ap.add_argument("--low", type=int, default=2)
     ap.add_argument("--high", type=int, default=8)
-    ap.add_argument(
-        "--no-pretouch", action="store_true",
-        help="disable -Xms<heap> -XX:+AlwaysPreTouch on both legs (default "
-        "on: commit+fault the heap during untimed startup; lazy heap growth "
-        "taxes the wide leg ~4x harder on this box's slow page faults)")
-    ap.add_argument(
-        "--heap-per-core", type=int, default=3,
-        help="JVM heap GB per core for each leg (heap scales with the leg's "
-        "core count — equal per-core memory is the faithful 'same "
-        "per-executor resources, 4x executors' substitution; a fixed heap "
-        "hands the narrow leg 4x the per-core memory and measurably taxes "
-        "it when pretouched)")
-    ap.add_argument(
-        "--no-pin", action="store_true",
-        help="disable CPU affinity pinning (default: each leg is pinned to "
-        "exactly its core count, the faithful N-core-executor substitution)")
     ap.add_argument(
         "--shuffle-partitions", type=int, default=None,
         help="shuffle partition count used IDENTICALLY by both legs "
@@ -228,23 +206,20 @@ def main() -> None:
     args = ap.parse_args()
     # clamp the per-core heap ONCE against the HIGH leg's total, so when the
     # cap binds BOTH legs shrink together and the equal-per-core-memory
-    # invariant (asserted by the generated report prose) stays true; the
-    # per-call clamp in spark_submit would otherwise shrink only the wide
-    # leg and bias the measured efficiency down
+    # invariant (asserted by the generated report prose) stays true; a
+    # pretouched -Xms heap above the cap risks JVM start failure or host
+    # OOM (the same RAM backs the /dev/shm shuffle dir)
+    heap_per_core = HEAP_PER_CORE_GB
     cap_gb = _heap_cap_gb()
-    if cap_gb is not None and args.heap_per_core * args.high > cap_gb:
-        clamped = cap_gb // args.high
-        if clamped < 1:
-            # even 1 GB/core exceeds the cap: spark_submit's per-call clamp
-            # would then shrink only the wide leg, the bias this avoids
+    if cap_gb is not None and heap_per_core * args.high > cap_gb:
+        heap_per_core = cap_gb // args.high
+        if heap_per_core < 1:
             sys.exit(f"--high {args.high} needs at least {args.high}g of heap "
                      f"(1g per core) but the cap is {cap_gb}g (60% of "
                      f"MemAvailable); lower --high or free memory")
-        print(f"clamping --heap-per-core {args.heap_per_core} -> {clamped} "
-              f"so the local[{args.high}] leg fits {cap_gb}g "
-              f"(60% of MemAvailable); both legs keep equal per-core heap",
-              file=sys.stderr)
-        args.heap_per_core = clamped
+        print(f"clamping the heap to {heap_per_core}g per core so the "
+              f"local[{args.high}] leg fits {cap_gb}g (60% of MemAvailable); "
+              "both legs keep equal per-core heap", file=sys.stderr)
     shuffle_parts = args.shuffle_partitions or 4 * args.high
 
     zip_path = "/tmp/transcriptts.zip"
@@ -253,14 +228,11 @@ def main() -> None:
     data_path = f"/tmp/transcriptts_scaling_{args.turns}.parquet"
     if not os.path.exists(data_path):
         n_convs = max(100, args.turns // 24)
-        # synth is untimed — skip the pretouch startup tax and keep its JVM
-        # config from silently diverging from the CLI flags
+        # synth is untimed — skip the pinning and the pretouch startup tax
         r = spark_submit(
-            f"local[{args.high}]", zip_path,
+            args.high, zip_path,
             ["synth", "--out", data_path, "--convs", str(n_convs), "--slices", "128"],
-            4 * args.high,
-            pretouch=False,
-            heap_gb=args.heap_per_core * args.high,
+            4 * args.high, heap_per_core * args.high, timed=False,
         )
         print("synth:", r, file=sys.stderr)
 
@@ -270,7 +242,7 @@ def main() -> None:
     # back-to-back (adjacent host-noise windows) and yields one ratio;
     # the reported efficiency is the MEDIAN across rounds.
     factor = args.high / args.low
-    passes_high = args.passes_high if args.passes_high is not None else int(args.passes * factor)
+    passes_high = int(args.passes * factor)
     rounds = []
     lo_best = hi_best = None
     for i in range(args.rounds):
@@ -281,12 +253,9 @@ def main() -> None:
             n_passes = args.passes if cores == args.low else passes_high
             pre_load = load1()
             r = spark_submit(
-                f"local[{cores}]", zip_path,
+                cores, zip_path,
                 ["bench", "--input", data_path, "--passes", str(n_passes)],
-                shuffle_parts,
-                pin_cpus=0 if args.no_pin else cores,
-                pretouch=not args.no_pretouch,
-                heap_gb=args.heap_per_core * cores,
+                shuffle_parts, heap_per_core * cores,
             )
             r["ext_load_pre"] = round(pre_load, 2)
             r["ext_load_post"] = round(load1() - cores, 2)
@@ -304,8 +273,7 @@ def main() -> None:
         if hi_best is None or pair[args.high]["turns_per_sec"] > hi_best["turns_per_sec"]:
             hi_best = pair[args.high]
 
-    effs = sorted(r["efficiency"] for r in rounds)
-    efficiency = effs[len(effs) // 2] if len(effs) % 2 else (effs[len(effs) // 2 - 1] + effs[len(effs) // 2]) / 2
+    efficiency = statistics.median(r["efficiency"] for r in rounds)
     lo, hi = lo_best, hi_best
     summary = {
         "metric": "scaling_efficiency",
@@ -322,43 +290,6 @@ def main() -> None:
     }
     print(json.dumps(summary))
 
-    if args.no_pin:
-        pin_note = (
-            "Legs are NOT CPU-pinned (--no-pin): local[N] limits task slots "
-            "only, while JVM helper threads float across all host cores."
-        )
-    else:
-        pin_note = (
-            "Each leg is PINNED (taskset) to exactly its core count, so the "
-            "JVM's GC/JIT/IO helper threads are confined to the same N CPUs a "
-            "real N-core executor would own. Without pinning, a local[N] JVM "
-            "fans helper threads across all 32 host cores, granting the low "
-            "leg ~30 free helper cores and biasing the measured efficiency "
-            "down (measured: 0.712 unpinned vs 1.014 pinned, same quiet "
-            "window, same input)."
-        )
-    if args.no_pretouch:
-        jvm_note = (
-            "JVM heap grows LAZILY (--no-pretouch): first-touch page faults "
-            "on fresh heap pages land inside the timed passes."
-        )
-    else:
-        jvm_note = (
-            f"Each leg runs a fully-pretouched heap sized to its core count "
-            f"({args.heap_per_core}g/core: {args.heap_per_core * args.low}g "
-            f"at local[{args.low}], {args.heap_per_core * args.high}g at "
-            f"local[{args.high}]; `-Xms=-Xmx -XX:+AlwaysPreTouch`, the "
-            "standard production setting): equal per-core memory is the "
-            "faithful 'same per-executor resources, 4x executors' "
-            "substitution, and the heap is committed and faulted during "
-            "untimed JVM startup. This sandbox's first-touch page faults are "
-            "slow and kernel-side (poorly parallel), so lazy heap growth "
-            "taxes the wide leg ~4x harder — it faults fresh pages 4x "
-            "faster (measured on the 24M exact job: 8-core leg median 80.0s "
-            "lazy vs 65.1s pretouched, -19%) — while an OVERSIZED pretouched "
-            "heap taxes the narrow leg (~230s vs ~173s low legs at 24M with "
-            "a fixed 24g heap on 2 cores)."
-        )
     round_rows = "\n".join(
         f"| {r['round']} | {r['low']['wall_sec_median']} | {r['high']['wall_sec_median']} "
         f"| {r['low']['turns_per_sec_median']:,} | {r['high']['turns_per_sec_median']:,} "
@@ -398,9 +329,25 @@ materialized via noop sink) run via
 input, with an IDENTICAL work decomposition (shuffle partitions fixed at
 {shuffle_parts} for both levels).
 
-{pin_note}
+Each leg is PINNED (taskset) to exactly its core count, so the JVM's
+GC/JIT/IO helper threads are confined to the same N CPUs a real N-core
+executor would own. Without pinning, a local[N] JVM fans helper threads
+across all 32 host cores, granting the low leg ~30 free helper cores and
+biasing the measured efficiency down (measured: 0.712 unpinned vs 1.014
+pinned, same quiet window, same input).
 
-{jvm_note}
+Each leg runs a fully-pretouched heap sized to its core count
+({heap_per_core}g/core: {heap_per_core * args.low}g at local[{args.low}],
+{heap_per_core * args.high}g at local[{args.high}]; `-Xms=-Xmx
+-XX:+AlwaysPreTouch`, the standard production setting): equal per-core
+memory is the faithful 'same per-executor resources, 4x executors'
+substitution, and the heap is committed and faulted during untimed JVM
+startup. This sandbox's first-touch page faults are slow and kernel-side
+(poorly parallel), so lazy heap growth taxes the wide leg ~4x harder — it
+faults fresh pages 4x faster (measured on the 24M exact job: 8-core leg
+median 80.0s lazy vs 65.1s pretouched, -19%) — while an OVERSIZED
+pretouched heap taxes the narrow leg (~230s vs ~173s low legs at 24M with
+a fixed 24g heap on 2 cores).
 
 **Paired measurement protocol.** The sandbox host has noisy neighbors
 (identical runs vary up to 10x under load spikes), so comparing a best-of-N

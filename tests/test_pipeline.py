@@ -109,7 +109,7 @@ def test_pipeline_incremental_scans_only_tail(spark, tmp_path):
 
     tail = [("c", 9 + j, "user", "f g", None, day2 + dt.timedelta(hours=8, minutes=10 * j)) for j in range(2)]
     allrows = d1 + d2 + tail
-    rep = p.run(mk(allrows), tiers=("1m", "1h", "1d"), incremental=True, debug_counts=True)
+    rep = p.run(mk(allrows), tiers=("1m", "1h", "1d"), incremental=True)
     for t in ("1m", "1h", "1d"):
         assert rep["metrics"][t]["incremental_from"] is not None
         # only the watermark-date rows were aggregated (day-2: 3 + 2 turns),

@@ -14,6 +14,7 @@ from transcriptts.rollup import (
     rollup,
     rollup_salted,
     rollup_tiers,
+    salted_long_metrics,
     segment_agg,
     with_derived_metrics,
 )
@@ -108,36 +109,47 @@ def test_latency_metric(spark):
 
 def _check_salted_matches_plain(spark, tier):
     """rollup_salted == rollup at `tier`, exact p50/p99 included. The input
-    adds one hot bucket, ~2,000 turns of one conversation inside a single
-    minute, so every salt carries a partial of that bucket; the coarse tiers
-    also merge salts spread over many minutes."""
+    adds two hot buckets of 2,000 turns each inside a single minute: one
+    with distinct timestamps, one whose turns all share one timestamp. Every
+    salt carries a partial of both, for both metrics; the coarse tiers also
+    merge salts spread over many minutes."""
     import pandas as pd
 
     tbl = synth_transcripts_arrow(n_convs=30, metronome_turns=90, seed=7).to_pandas()
     n_hot = 2000
-    hot = pd.DataFrame({
-        "conv_id": "conv-hot",
-        "turn_idx": range(n_hot),
-        "role": "user",
-        "text": [" ".join(["w"] * (1 + i % 17)) for i in range(n_hot)],
-        "tool": None,
-        "ts": [pd.Timestamp("2025-01-01 03:07:00") + pd.Timedelta(microseconds=29_000 * i)
-               for i in range(n_hot)],
-    })
-    d = with_derived_metrics(spark.createDataFrame(pd.concat([tbl, hot], ignore_index=True)))
-    hot_salts = (
-        d.where(F.col("conv_id") == "conv-hot")
-        .select(F.pmod(F.hash("ts"), F.lit(4)).alias("salt"))
-        .distinct()
-        .count()
-    )
-    assert hot_salts == 4
+    t0 = pd.Timestamp("2025-01-01 03:07:00")
+
+    def hot_conv(conv_id, ts):
+        return pd.DataFrame({
+            "conv_id": conv_id,
+            "turn_idx": range(n_hot),
+            "role": "user",
+            "text": [" ".join(["w"] * (1 + i % 17)) for i in range(n_hot)],
+            "tool": None,
+            "ts": ts,
+        })
+
+    hot = hot_conv("conv-hot", [t0 + pd.Timedelta(microseconds=29_000 * i) for i in range(n_hot)])
+    hot_ts = hot_conv("conv-hot-ts", [t0 + pd.Timedelta(seconds=5)] * n_hot)
+    d = with_derived_metrics(spark.createDataFrame(pd.concat([tbl, hot, hot_ts], ignore_index=True)))
+    hot_salts = {
+        (r["conv_id"], r["metric"]): r["n"]
+        for r in salted_long_metrics(d, 4)
+        .where(F.col("conv_id").startswith("conv-hot"))
+        .groupBy("conv_id", "metric")
+        .agg(F.countDistinct("salt").alias("n"))
+        .collect()
+    }
+    assert hot_salts == {
+        (c, m): 4 for c in ("conv-hot", "conv-hot-ts") for m in ("token_count", "latency_s")
+    }
     plain = {
         (r["conv_id"], r["bucket_start"], r["metric"]): r for r in rollup(d, tier).collect()
     }
     salted = rollup_salted(d, tier, salt_buckets=4).collect()
     assert len(salted) == len(plain)
     assert any(r["conv_id"] == "conv-hot" and r["cnt"] == n_hot for r in salted)
+    assert any(r["conv_id"] == "conv-hot-ts" and r["cnt"] == n_hot for r in salted)
     for r in salted:
         p = plain[(r["conv_id"], r["bucket_start"], r["metric"])]
         assert r["cnt"] == p["cnt"], (r, p)

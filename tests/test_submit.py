@@ -38,8 +38,10 @@ def _submit(zip_path: str, cli_args: list[str], cwd: str) -> str:
     ]
     # cwd is a scratch dir (NOT the repo), so the driver resolves the
     # package from --py-files alone — import leaks from ./transcriptts
-    # would go unnoticed if we ran from the repo root.
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=cwd)
+    # would go unnoticed if we ran from the repo root. SPARK_GRAFT_CPUS
+    # names another core count than --master: the launcher's value must win.
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "3"}
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=cwd, env=env)
     assert out.returncode == 0, out.stderr[-3000:]
     return out.stdout
 
@@ -77,3 +79,4 @@ def test_spark_submit_pipeline_end_to_end(tmp_path):
     b = _last_json(_submit(zip_path, ["bench", "--input", data, "--passes", "1"], cwd))
     assert b["turns"] == r["rows"] and b["tiers"] == 3
     assert b["turns_per_sec"] > 0
+    assert b["cores"] == 4  # --master local[4], not SPARK_GRAFT_CPUS

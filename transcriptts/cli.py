@@ -9,7 +9,11 @@ Package + submit (the north-rule launch mode):
 Subcommands:
   synth   --out PATH --convs N [--seed S] [--metronome N] [--slices N]
   rollup  --input PATH --root PATH [--tiers 1m,1h,1d] [--incremental]
-  bench   --input PATH [--tiers ...]    (prints one JSON line: turns/sec)
+  bench   --input PATH [--passes N]  (prints one JSON line: turns/sec and the
+                                      wall and load of every pass)
+
+The session comes from ``session.get_spark``; the launcher's ``--master`` and
+``--conf`` values win over its defaults.
 """
 
 from __future__ import annotations
@@ -17,8 +21,69 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
+
+
+def time_tiers(df, passes: int) -> dict:
+    """Time the three ``rollup_tiers`` noop writes over ``df``: one untimed
+    warm-up pass, then ``passes`` timed ones. The one timer of the tier job,
+    shared by ``cli.py bench`` (and so ``scripts/run_scaling.py``) and
+    ``bench.py``. Returns turns, walls, 1-min loads and throughputs (input
+    turns x 3 tiers / wall)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from transcriptts.rollup import rollup_tiers
+
+    n_turns = df.count()
+
+    def run_tiers() -> None:
+        # submit the three tier jobs concurrently: each tier's plan (and
+        # hence the work decomposition) is unchanged, but the scheduler
+        # can fill the idle slots of one job's straggler wave / planning
+        # gap with another job's tasks — dead time that otherwise grows
+        # with core count and erodes measured scaling efficiency
+        tiers = rollup_tiers(df)
+        with ThreadPoolExecutor(max_workers=len(tiers)) as ex:
+            futs = [
+                ex.submit(lambda t=t: t.write.format("noop").mode("overwrite").save())
+                for t in tiers.values()
+            ]
+            for f in futs:
+                f.result()
+
+    # untimed warmup pass: JIT/codegen compilation and page cache, so the
+    # timed passes measure steady-state throughput at both core counts
+    run_tiers()
+    walls = []
+    loads_pre, loads_post = [], []
+    for _ in range(max(passes, 1)):
+        # per-pass 1-min load BEFORE and AFTER: external tenant bursts on
+        # this shared box hit individual passes, so per-leg load alone
+        # cannot attribute a slow pass — these columns can
+        loads_pre.append(round(os.getloadavg()[0], 2))
+        t0 = time.time()
+        run_tiers()
+        walls.append(round(time.time() - t0, 3))
+        loads_post.append(round(os.getloadavg()[0], 2))
+    wall = min(walls)
+    # median is the fair cross-leg estimator when legs run different
+    # pass counts (equal wall-clock exposure): the min of more samples
+    # is biased lower under noise, the median is not
+    wall_med = statistics.median(walls)
+    return {
+        "turns": n_turns,
+        "tiers": 3,
+        "wall_sec": wall,
+        "wall_sec_median": round(wall_med, 3),
+        "wall_sec_all": walls,
+        "load1_pre_all": loads_pre,
+        "load1_post_all": loads_post,
+        "turns_per_sec": round(n_turns * 3 / wall, 1),
+        "turns_per_sec_median": round(n_turns * 3 / wall_med, 1),
+        "cores": df.sparkSession.sparkContext.defaultParallelism,
+    }
 
 
 def main(argv=None) -> int:
@@ -40,7 +105,6 @@ def main(argv=None) -> int:
 
     p_bench = sub.add_parser("bench")
     p_bench.add_argument("--input", required=True)
-    p_bench.add_argument("--tiers", default="1m,1h,1d")
     p_bench.add_argument(
         "--passes", type=int, default=3,
         help="timed steady-state passes; min wall is reported (the sandbox "
@@ -49,16 +113,10 @@ def main(argv=None) -> int:
 
     args = ap.parse_args(argv)
 
-    # spark-submit provides the app JVM; builder.getOrCreate attaches to it.
-    from pyspark.sql import SparkSession
+    # spark-submit provides the app JVM; get_spark attaches to it
+    from transcriptts.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName(f"transcriptts-{args.cmd}")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name=f"transcriptts-{args.cmd}")
 
     if args.cmd == "synth":
         from transcriptts.synth import synth_transcripts_spark
@@ -80,65 +138,7 @@ def main(argv=None) -> int:
         print(json.dumps(report))
 
     elif args.cmd == "bench":
-        from transcriptts.rollup import rollup_tiers
-
-        df = spark.read.parquet(args.input)
-        n_turns = df.count()
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        def run_tiers() -> None:
-            # submit the three tier jobs concurrently: each tier's plan (and
-            # hence the work decomposition) is unchanged, but the scheduler
-            # can fill the idle slots of one job's straggler wave / planning
-            # gap with another job's tasks — dead time that otherwise grows
-            # with core count and erodes measured scaling efficiency
-            tiers = rollup_tiers(df)
-            with ThreadPoolExecutor(max_workers=len(tiers)) as ex:
-                futs = [
-                    ex.submit(lambda t=t: t.write.format("noop").mode("overwrite").save())
-                    for t in tiers.values()
-                ]
-                for f in futs:
-                    f.result()
-
-        # untimed warmup pass: JIT/codegen compilation and page cache, so the
-        # timed passes measure steady-state throughput at both core counts
-        run_tiers()
-        walls = []
-        loads_pre, loads_post = [], []
-        for _ in range(max(args.passes, 1)):
-            # per-pass 1-min load BEFORE and AFTER: external tenant bursts on
-            # this shared box hit individual passes, so per-leg load alone
-            # cannot attribute a slow pass — these columns can
-            loads_pre.append(round(os.getloadavg()[0], 2))
-            t0 = time.time()
-            run_tiers()
-            walls.append(round(time.time() - t0, 3))
-            loads_post.append(round(os.getloadavg()[0], 2))
-        wall = min(walls)
-        # median is the fair cross-leg estimator when legs run different
-        # pass counts (equal wall-clock exposure): the min of more samples
-        # is biased lower under noise, the median is not
-        sw = sorted(walls)
-        wall_med = sw[len(sw) // 2] if len(sw) % 2 else (sw[len(sw) // 2 - 1] + sw[len(sw) // 2]) / 2
-        cores = spark.sparkContext.defaultParallelism
-        print(
-            json.dumps(
-                {
-                    "turns": n_turns,
-                    "tiers": 3,
-                    "wall_sec": wall,
-                    "wall_sec_median": round(wall_med, 3),
-                    "wall_sec_all": walls,
-                    "load1_pre_all": loads_pre,
-                    "load1_post_all": loads_post,
-                    "turns_per_sec": round(n_turns * 3 / wall, 1),
-                    "turns_per_sec_median": round(n_turns * 3 / wall_med, 1),
-                    "cores": cores,
-                }
-            )
-        )
+        print(json.dumps(time_tiers(spark.read.parquet(args.input), args.passes)))
 
     spark.stop()
     return 0

@@ -18,9 +18,12 @@ Two implementations with identical semantics:
    Leading gaps stay null in both modes (nothing to carry).
 
 2. ``gapfill_pandas`` — pandas ``ffill`` / ``interpolate`` per series,
-   run through `partitioning.per_series` over Arrow batches — kept as a
-   golden cross-check of (1), and the shape the north rule names ('gap-fill
-   inside vectorized pandas/Arrow UDFs').
+   run through `partitioning.per_series` over Arrow batches — the shape the
+   north rule names ('gap-fill inside vectorized pandas/Arrow UDFs'). It
+   stays beside (1) because it is the independent reference that
+   tests/test_gapfill.py and the benchmark's gap-fill gate
+   (perfbench/checks.py) compare ``gapfill`` against; deleting it would
+   leave (1) checked only against itself.
 """
 
 from __future__ import annotations

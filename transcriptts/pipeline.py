@@ -181,14 +181,13 @@ class RollupPipeline:
         tiers: tuple[str, ...] = ("1m", "1h", "1d"),
         input_fingerprint: str | None = None,
         incremental: bool = False,
-        debug_counts: bool = False,
     ) -> dict:
         """Compute + persist the requested tiers; returns the run report.
 
         input_fingerprint identifies the input version (e.g. source snapshot
         id / max ingest ts). Tiers already committed for this fingerprint are
-        skipped — that is the resume path. debug_counts additionally counts
-        each tier's (filtered) aggregation input — an extra pass, tests only.
+        skipped — that is the resume path. Each tier's metrics include
+        batch_rows, the turns its aggregation read.
         """
         if input_fingerprint is None:
             agg = transcripts.select(
@@ -230,7 +229,13 @@ class RollupPipeline:
                 obs = Observation()
                 out = (
                     rollup(d, tier)
-                    .observe(obs, F.count("*").alias("rows"), F.max("bucket_start").alias("mx"))
+                    .observe(
+                        obs, F.count("*").alias("rows"), F.max("bucket_start").alias("mx"),
+                        # every turn has a (non-null) token_count, so its
+                        # counts sum to the batch's turns
+                        F.coalesce(F.sum(F.when(F.col("metric") == "token_count", F.col("cnt"))),
+                                   F.lit(0)).alias("batch_rows"),
+                    )
                     .withColumn("p_date", F.to_date("bucket_start"))
                     .repartition("p_date")
                     .sortWithinPartitions("conv_id", "metric", "bucket_start")
@@ -249,6 +254,7 @@ class RollupPipeline:
                 parts = _partition_stats(path)
                 metrics = {
                     "rows": sum(p["rows"] for p in parts), "rows_written": written["rows"],
+                    "batch_rows": written["batch_rows"],
                     "bytes": sum(p["bytes"] for p in parts), "wall_sec": wall,
                     "incremental_from": prev_watermark,
                 }
@@ -267,8 +273,6 @@ class RollupPipeline:
                 self._commit_state(state)
                 report["snapshot_ids"][tier] = snapshot_id
                 report["metrics"][tier] = metrics
-                if debug_counts:
-                    metrics["batch_rows"] = d.count()
 
             # maintain the per-(conv, date) seed state for the NEXT incremental
             # run; an all-incremental run only rewrites post-cutoff dates.

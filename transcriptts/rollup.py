@@ -104,12 +104,19 @@ def _parse_gap_us(gap: str) -> int:
     return int(qty) * mult[unit]
 
 
-def _long_metrics(df: DataFrame) -> DataFrame:
-    """Wide → long: one row per (turn, metric); null metric values dropped
-    (turn 0 has no latency — matches 'gaps do not exist' reference model)."""
+def salted_long_metrics(df: DataFrame, salt_buckets: int) -> DataFrame:
+    """Wide → long: one row per (turn, metric) with a `salt` in
+    [0, salt_buckets); null metric values dropped (turn 0 has no latency —
+    matches 'gaps do not exist' reference model).
+
+    The salt is drawn per TURN from its row id, not from ts, so turns that
+    share a timestamp (bulk imports, second-resolution clocks) still spread
+    over every salt; drawing it before the stack gives both metric rows of a
+    turn one salt, so each metric uses every salt."""
     pairs = ", ".join(f"'{m}', cast({m} as double)" for m in METRICS)
     return (
-        df.select("conv_id", "ts", F.expr(f"stack({len(METRICS)}, {pairs}) as (metric, value)"))
+        df.withColumn("salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets)))
+        .select("conv_id", "ts", "salt", F.expr(f"stack({len(METRICS)}, {pairs}) as (metric, value)"))
         .where(F.col("value").isNotNull())
     )
 
@@ -195,10 +202,7 @@ def rollup_salted(df: DataFrame, tier: str = "1m", salt_buckets: int = 8) -> Dat
     alone. Use when one (conv, minute) can hold millions of turns.
     """
     duration = TIERS[tier]
-    long_df = _long_metrics(df).withColumn(
-        "salt", F.pmod(F.hash("ts"), F.lit(salt_buckets))
-    )
-    partial = long_df.groupBy(
+    partial = salted_long_metrics(df, salt_buckets).groupBy(
         "conv_id", F.window("ts", duration).alias("w"), "metric", "salt"
     ).agg(
         F.count("value").alias("p_cnt"),

@@ -4,6 +4,10 @@ Defaults target the sandbox (single JVM, local[N]) but every knob is the one
 you would also set on a real multi-executor cluster: AQE on (post-shuffle
 coalescing + skew splitting), Arrow transfer for every pandas/Arrow UDF hop,
 shuffle partitions sized to cores.
+
+Precedence, lowest first: these defaults, then the values a spark-submit
+launcher set (``--master``, ``--conf``), then explicit ``get_spark``
+arguments.
 """
 
 from __future__ import annotations
@@ -13,14 +17,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _launcher_conf() -> dict[str, str]:
+    """spark.* values set by the spark-submit that launched this process
+    (its driver JVM carries them as system properties); empty in a plain
+    Python process, whose JVM get_spark starts itself."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()  # attaches to the launcher's JVM
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app_name: str = "transcriptts",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    launcher = _launcher_conf()
+    given = {k: str(v) for k, v in (("spark.master", master),
+                                    ("spark.sql.shuffle.partitions", shuffle_partitions))
+             if v is not None}
+    given.update(extra_conf or {})
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    master = master or f"local[{cpus}]"
+    master = master or launcher.get("spark.master") or f"local[{cpus}]"
     # 4 tasks per core, NOT 1: measured on the 16M-turn tier rollup, one
     # shuffle partition per core runs 2-4x slower at every parallelism level
     # (single oversized percentile buffers + zero straggler smoothing); 4x
@@ -29,11 +50,10 @@ def get_spark(
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
         shuffle_partitions = 4 * (cpus if n == "*" else max(int(n), 1))
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+    conf = {
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
         # Byte-based post-shuffle coalescing is right for JVM aggregates but
         # wrong for CPU-bound grouped Python kernels: a few-MB input gets
         # coalesced to 1-2 partitions and the kernel stage runs on one core
@@ -43,14 +63,14 @@ def get_spark(
         # task slots) with an explicit exchange that AQE never coalesces,
         # see partitioning.per_series, so they hold in sessions that
         # re-enable this too.
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+    }
     # Shuffle spill dir on tmpfs when it is actually big enough: the
     # sandbox's root disk serializes concurrent shuffle writes (~25% of
     # wall at 32 cores), but containers commonly mount a tiny (64 MB)
@@ -67,7 +87,13 @@ def get_spark(
     if use_tmpfs:
         shm = "/dev/shm/spark-local"
         os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
-    for k, v in (extra_conf or {}).items():
+        conf["spark.local.dir"] = shm
+    # a launcher's values stay as it set them (any SparkSession.builder
+    # option would override them); explicit arguments override both
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
+        if k not in launcher:
+            builder = builder.config(k, v)
+    for k, v in given.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
