@@ -46,7 +46,13 @@ def main() -> None:
     n_turns_target = int(os.environ.get("BENCH_TURNS", 2_000_000))
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    # the repo on PYTHONPATH before the JVM starts, so the Python workers it
+    # forks (the synth UDF) import transcriptts from any working directory
+    repo = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, repo)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
     from transcriptts.session import get_spark
     from transcriptts.synth import synth_transcripts_spark
 
@@ -64,9 +70,13 @@ def main() -> None:
     n_convs = max(100, int(n_turns_target / 24))
     synth_path = f"/tmp/transcriptts_bench_{n_turns_target}_{cpus}.parquet"
     if not os.path.exists(synth_path):
+        # written beside the final path and renamed only once complete, so a
+        # failed run leaves nothing that a later run would take as finished
+        tmp_path = f"{synth_path}.tmp-{os.getpid()}"
         synth_transcripts_spark(
             spark, n_convs=n_convs, metronome_turns=86400, slices=cpus * 4
-        ).write.mode("overwrite").parquet(synth_path)
+        ).write.mode("overwrite").parquet(tmp_path)
+        os.rename(tmp_path, synth_path)
 
     passes = max(1, int(os.environ.get("BENCH_PASSES", 3)))
 

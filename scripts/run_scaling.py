@@ -73,8 +73,9 @@ def spark_submit(
     if timed:
         # Pin the whole process tree (JVM + Python workers) to exactly
         # `cores` host CPUs. Without affinity, a local[2] JVM still fans
-        # its GC/JIT/netty threads across all 32 host cores — the low leg
-        # gets ~30 free helper cores a real 2-core executor would not have,
+        # its GC/JIT/netty threads across every host core
+        # (len(os.sched_getaffinity(0))) — the low leg gets all but 2 of
+        # them as free helper cores a real 2-core executor would not have,
         # which biases measured scaling efficiency DOWN. Affinity makes each
         # leg a faithful N-core executor (availableProcessors follows the
         # mask, so GC/JIT pools self-size to N as on a real N-core box).
@@ -221,6 +222,7 @@ def main() -> None:
               f"local[{args.high}] leg fits {cap_gb}g (60% of MemAvailable); "
               "both legs keep equal per-core heap", file=sys.stderr)
     shuffle_parts = args.shuffle_partitions or 4 * args.high
+    host_cores = len(os.sched_getaffinity(0))
 
     zip_path = "/tmp/transcriptts.zip"
     make_zip(zip_path)
@@ -332,9 +334,10 @@ input, with an IDENTICAL work decomposition (shuffle partitions fixed at
 Each leg is PINNED (taskset) to exactly its core count, so the JVM's
 GC/JIT/IO helper threads are confined to the same N CPUs a real N-core
 executor would own. Without pinning, a local[N] JVM fans helper threads
-across all 32 host cores, granting the low leg ~30 free helper cores and
-biasing the measured efficiency down (measured: 0.712 unpinned vs 1.014
-pinned, same quiet window, same input).
+across all {host_cores} host cores, granting the low leg
+{max(host_cores - args.low, 0)} free helper cores and biasing the measured
+efficiency down (measured on an earlier 32-core host: 0.712 unpinned vs
+1.014 pinned, same quiet window, same input).
 
 Each leg runs a fully-pretouched heap sized to its core count
 ({heap_per_core}g/core: {heap_per_core * args.low}g at local[{args.low}],
@@ -390,10 +393,11 @@ throughput metric from BASELINE.json. Reproduce with
 
 ## Why N={args.low} (not 8->32)
 
-Going 8->32 cores on this single-socket 32-core box the same job tops out
-at ~0.45-0.55 efficiency: all 32 threads share ONE memory bus and one JVM
+Measured on an earlier single-socket 32-core host (this one has
+{host_cores} cores): going 8->32 cores there, the same job topped out at
+~0.45-0.55 efficiency: all 32 threads shared ONE memory bus and one JVM
 heap, so the aggregation's allocation traffic (exact-percentile buffers,
-shuffle serialization) saturates bandwidth, and host steal time rises with
+shuffle serialization) saturated bandwidth, and host steal time rose with
 occupancy. A real 4x-executor cluster adds 4x memory bandwidth, 4x GC
 capacity, and 4x shuffle-write disks — the resource the single-box
 substitution cannot scale. The {args.low}->{args.high} pair keeps total

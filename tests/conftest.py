@@ -9,7 +9,12 @@ import pytest
 def spark():
     from transcriptts.session import get_spark
 
-    s = get_spark(app_name="transcriptts-tests", master="local[4]", shuffle_partitions=4)
+    # the status store keeps every stage of the session: past its default
+    # 1,000 it evicts SKIPPED stages first, asynchronously, even those of the
+    # job a test just ran, and the stage checks in test_partitioning.py read
+    # them ("No stage with id ..." about 3,000 stages into tier-1)
+    s = get_spark(app_name="transcriptts-tests", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.ui.retainedStages": "100000"})
     yield s
     s.stop()
 
@@ -32,3 +37,21 @@ def make_signal(spark):
         return signal_df(spark, values, conv_id)
 
     return _make
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, action)`` runs ``action()`` under Spark job group
+    ``group``; returns (jobs it issued, from the status tracker, its result)."""
+
+    def _count(group, action):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            result = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    return _count

@@ -262,12 +262,27 @@ def test_compact_partitions_merges_append_mode_small_files(spark, tmp_path):
     # no lineage record
     root = str(tmp_path / "tiers")
     pipe = RollupPipeline(spark, root)
-    pipe.run(df, tiers=("1h",))
+    run = pipe.run(df, tiers=("1h",))
     rep3 = pipe.compact_tier("1h")
     assert rep3["compacted"] == [] and "snapshot_id" not in rep3
     assert not [
         f for f in os.listdir(os.path.join(root, "lineage")) if f.startswith("compact-")
     ]
+
+    # a multi-file tier layout is compacted with a lineage record in the
+    # shared format, as is the run's
+    tier_dir = os.path.join(root, "tier=1h")
+    n_rows = pipe.read_tier("1h").count()
+    pipe.read_tier("1h").write.option("maxRecordsPerFile", 50).partitionBy("p_date") \
+        .parquet(str(tmp_path / "split"))
+    shutil.rmtree(tier_dir)
+    os.rename(str(tmp_path / "split"), tier_dir)
+    rep4 = pipe.compact_tier("1h")
+    assert rep4["compacted"] and pipe.read_tier("1h").count() == n_rows
+    for op, sid in (("rollup", run["snapshot_ids"]["1h"]), ("compact", rep4["snapshot_id"])):
+        with open(os.path.join(root, "lineage", f"{sid}.json")) as f:
+            lin = json.load(f)
+        assert (lin["version"], lin["snapshot_id"], lin["op"], lin["tier"]) == (2, sid, op, "1h")
 
 
 def test_compact_partitions_crash_recovery(spark, tmp_path):
@@ -443,19 +458,38 @@ def test_mixed_watermarks_equal_full_recompute(spark, tmp_path):
 PIPELINE_JOB_BUDGET = 13
 
 
-def test_incremental_run_job_budget(spark, tmp_path):
+def test_incremental_run_job_budget(spark, tmp_path, count_jobs):
     """An incremental 3-tier run issues at most PIPELINE_JOB_BUDGET Spark
     jobs: bookkeeping rides on the writes, no tier is read back."""
     upto1, upto2, _ = _three_days()
     p = RollupPipeline(spark, str(tmp_path / "tiers"))
     p.run(_mk_turns(spark, upto1))
     df = _mk_turns(spark, upto2)
-    sc = spark.sparkContext
-    sc.setJobGroup("pipeline-job-budget", "incremental RollupPipeline.run")
-    try:
-        p.run(df, incremental=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-budget")
-    assert len(jobs) <= PIPELINE_JOB_BUDGET, len(jobs)
+    jobs, _ = count_jobs("pipeline-job-budget", lambda: p.run(df, incremental=True))
+    assert jobs <= PIPELINE_JOB_BUDGET, jobs
+
+
+# Jobs of compact_partitions, per partition it rewrites (local[4], AQE):
+#   1  schema inference of the partition's files (spark.read.parquet)
+#   1  the coalesced write into the temp dir
+# The row-count check reads parquet footers; a Spark count of the source or
+# a read-back of the temp dir pushes it over.
+COMPACTION_JOBS_PER_PARTITION = 2
+
+
+def test_compaction_job_budget(spark, tmp_path, count_jobs):
+    """compact_partitions over a store written twice issues at most
+    COMPACTION_JOBS_PER_PARTITION Spark jobs per partition it rewrites."""
+    from transcriptts.pipeline import compact_partitions
+    from transcriptts.store import write_raw_turns
+    from transcriptts.synth import synth_transcripts_arrow
+
+    store = str(tmp_path / "raw")
+    df = spark.createDataFrame(
+        synth_transcripts_arrow(n_convs=12, metronome_turns=200, seed=9).to_pandas()
+    )
+    write_raw_turns(df, store, num_ranges=2, mode="overwrite")
+    write_raw_turns(df, store, num_ranges=2, mode="append")
+    jobs, rep = count_jobs("compaction-job-budget", lambda: compact_partitions(spark, store))
+    assert len(rep["compacted"]) >= 2
+    assert jobs <= COMPACTION_JOBS_PER_PARTITION * len(rep["compacted"]), (jobs, rep)

@@ -61,6 +61,9 @@ def test_expiry_drops_old_partitions_and_archives_bit_exact(spark, pipeline, tmp
         t for t in before
         if str(t[2].date()) in expected_expired
     }
+    n_expiring = pipeline.read_tier("1h").where(
+        F.col("p_date").cast("string").isin(expected_expired)
+    ).count()
     archive_root = str(tmp_path / "cold")
 
     report = apply_retention(
@@ -80,6 +83,10 @@ def test_expiry_drops_old_partitions_and_archives_bit_exact(spark, pipeline, tmp
     assert lineage["partitions_dropped"] == expected_expired
     assert lineage["bytes_freed"] > 0
     assert lineage["archive"]["enc_bytes"] > 0
+    # the shared record format, and rows_dropped from the dropped footers
+    assert lineage["version"] == 2
+    assert (lineage["snapshot_id"], lineage["tier"]) == (snap, "1h")
+    assert lineage["rows_dropped"] == n_expiring
 
     # archive restores the dropped rows BIT-EXACTLY (Gorilla is lossless)
     restored = restore_archive(pipeline, archive_root, "1h")
@@ -139,11 +146,10 @@ def test_null_stats_roundtrip_as_null(spark, pipeline):
 
 
 def test_archive_report_counts_only_this_run(spark, pipeline, tmp_path):
-    """A crash-retry re-archive appends duplicate blobs for the same
-    p_dates; the report must count only the current run's output, and
-    restore must still dedupe to the newest copy."""
-    import time as _time
-
+    """A crash-retry re-archives the same p_dates: the write overwrites
+    those partitions, so the archive holds one blob per (conv_id, metric,
+    chunk), the report counts only the current run's output, and restore
+    returns every row once."""
     from transcriptts.retention import archive_partitions, restore_archive
 
     arch = str(tmp_path / "cold")
@@ -156,7 +162,6 @@ def test_archive_report_counts_only_this_run(spark, pipeline, tmp_path):
         .collect()
     }
     rep1 = archive_partitions(pipeline, "1d", dates, arch)
-    _time.sleep(0.002)  # distinct run stamp
     rep2 = archive_partitions(pipeline, "1d", dates, arch)  # simulated retry
     assert rep2["chunks"] == rep1["chunks"]
     assert rep2["points"] == rep1["points"]
@@ -166,7 +171,30 @@ def test_archive_report_counts_only_this_run(spark, pipeline, tmp_path):
         tuple(r[c] for c in ("conv_id", "metric", "bucket_start", *STAT_COLS))
         for r in restored.select("conv_id", "metric", "bucket_start", *STAT_COLS).collect()
     }
-    assert got == before  # newest-blob dedup: no duplicated rows
+    assert got == before  # no duplicated rows
+    blobs = spark.read.parquet(rep2["path"])
+    assert blobs.count() == rep2["chunks"]
+    assert blobs.select("conv_id", "metric", "chunk").distinct().count() == rep2["chunks"]
+
+
+# Jobs of apply_retention with an archive root, one expiring tier (local[4]):
+#   1  schema inference of the tier (read_tier)
+#   1  the Gorilla encode's exchange, shuffle-map job
+#   1  the blob write
+# The report comes from an Observation on that write and the expire record
+# from parquet footers; reading the archive back pushes it over.
+RETENTION_JOB_BUDGET = 3
+
+
+def test_retention_job_budget(spark, pipeline, tmp_path, count_jobs):
+    """apply_retention with archiving issues at most RETENTION_JOB_BUDGET
+    Spark jobs."""
+    dates = _p_dates(pipeline, "1h")
+    now = dt.date.fromisoformat(dates[-1]) + dt.timedelta(days=1)
+    jobs, report = count_jobs("retention-job-budget", lambda: apply_retention(
+        pipeline, {"1h": 1}, now=now, archive_root=str(tmp_path / "cold")))
+    assert report["archived"]["1h"]["chunks"] > 0
+    assert jobs <= RETENTION_JOB_BUDGET, jobs
 
 
 def test_archive_scan_is_partition_pruned(spark, pipeline, tmp_path):

@@ -7,11 +7,23 @@ an atomically-swapped JSON manifest; every concept maps 1:1 onto Iceberg
 (snapshot id ↔ Iceberg snapshot id, manifest swap ↔ commit, watermark ↔ WAP
 branch publish, partition dir ↔ hidden partition days(bucket_start)):
 
-layout under root/:
+layout under root/ (this class is the only code that walks it):
   state.json                    -- atomic checkpoint: per-tier watermark +
                                    last snapshot id + input fingerprint
   tier=<t>/p_date=YYYY-MM-DD/   -- rollup data, partitioned by bucket date
-  lineage/<snapshot>.json       -- per-run, per-partition lineage + metrics
+  lineage/<snapshot>.json       -- one record per operation on a tier
+
+Lineage records share one format, written by `_record`:
+  {"version": 2, "snapshot_id", "op", "tier", ...op fields}
+  op "rollup"  (run, snapshot `<tier>-<id>`): input_fingerprint, rows,
+               rows_written, batch_rows, bytes, wall_sec, incremental_from,
+               partitions [{p_date, rows, bytes}]
+  op "compact" (compact_tier, `compact-<tier>-<id>`): partitions,
+               files_before, files_after
+  op "expire"  (retention.apply_retention, `expire-<tier>-<id>`): cutoff,
+               partitions_dropped, rows_dropped, bytes_freed, archive
+Row and byte figures come from parquet footers and file sizes, never from
+reading data back.
 
 Resume semantics:
 - a tier whose state entry matches the current input fingerprint is skipped
@@ -42,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -68,18 +81,12 @@ def _later(watermark: str | None, observed: datetime | None) -> str | None:
     return str(observed)
 
 
-def _partition_stats(path: str) -> list[dict]:
-    """{p_date, rows, bytes} per tier partition, from parquet footers and file sizes."""
-    parts = []
-    for dp, _, fns in sorted(os.walk(path)):
-        files = [os.path.join(dp, fn) for fn in fns if fn.endswith(".parquet")]
-        if files and os.path.basename(dp).startswith("p_date="):
-            parts.append({
-                "p_date": os.path.basename(dp).split("=", 1)[1],
-                "rows": sum(pq.read_metadata(f).num_rows for f in files),
-                "bytes": sum(os.path.getsize(f) for f in files),
-            })
-    return parts
+def _parquet_files(d: str) -> list[str]:
+    return [os.path.join(d, fn) for fn in sorted(os.listdir(d)) if fn.endswith(".parquet")]
+
+
+def _footer_rows(files: list[str]) -> int:
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 class RollupPipeline:
@@ -106,6 +113,41 @@ class RollupPipeline:
         with open(tmp, "w") as f:
             json.dump(state, f, indent=2, sort_keys=True)
         os.replace(tmp, self._state_path)  # atomic snapshot commit
+
+    # --- tier layout and lineage ---------------------------------------------
+
+    def _tier_path(self, tier: str) -> str:
+        return os.path.join(self.root, f"tier={tier}")
+
+    def _partitions(self, tier: str) -> dict[str, str]:
+        """{p_date: directory} of a tier in p_date order, from directory names
+        only (no scan)."""
+        root = self._tier_path(tier)
+        names = sorted(os.listdir(root)) if os.path.isdir(root) else []
+        return {n.split("=", 1)[1]: os.path.join(root, n)
+                for n in names if re.fullmatch(r"p_date=\d{4}-\d{2}-\d{2}", n)}
+
+    def _partition_stats(self, tier: str, p_dates: list[str] | None = None) -> list[dict]:
+        """{p_date, rows, bytes} per partition (every one, or the given
+        p_dates), from parquet footers and file sizes."""
+        parts = self._partitions(tier)
+        stats = []
+        for d in sorted(parts if p_dates is None else p_dates):
+            files = _parquet_files(parts[d])
+            if files:
+                stats.append({"p_date": d, "rows": _footer_rows(files),
+                              "bytes": sum(map(os.path.getsize, files))})
+        return stats
+
+    def _record(self, op: str, tier: str, **fields) -> str:
+        """Write one lineage record (format in the module docstring); returns
+        its snapshot id."""
+        prefix = "" if op == "rollup" else f"{op}-"
+        snapshot_id = f"{prefix}{tier}-{uuid.uuid4().hex[:12]}"
+        record = {"version": 2, "snapshot_id": snapshot_id, "op": op, "tier": tier, **fields}
+        with open(os.path.join(self.root, "lineage", f"{snapshot_id}.json"), "w") as f:
+            json.dump(record, f, indent=2)
+        return snapshot_id
 
     # --- per-conv seed state (exact cross-cutoff latency) --------------------
 
@@ -222,7 +264,6 @@ class RollupPipeline:
                   for k, f in frames.items()}
         try:
             for tier, prev_watermark in todo.items():
-                snapshot_id = f"{tier}-{uuid.uuid4().hex[:12]}"
                 t0 = time.time()
                 d = (frames[False] if prev_watermark is None
                      else frames[True].where(F.col("ts") >= _cutoff(prev_watermark)))
@@ -240,7 +281,7 @@ class RollupPipeline:
                     .repartition("p_date")
                     .sortWithinPartitions("conv_id", "metric", "bucket_start")
                 )
-                path = os.path.join(self.root, f"tier={tier}")
+                path = self._tier_path(tier)
                 writer = out.write.partitionBy("p_date")
                 if prev_watermark is not None and os.path.exists(path):
                     # incremental: swap only the p_date partitions present in
@@ -251,17 +292,15 @@ class RollupPipeline:
                 wall = round(time.time() - t0, 3)
 
                 written = obs.get
-                parts = _partition_stats(path)
+                parts = self._partition_stats(tier)
                 metrics = {
                     "rows": sum(p["rows"] for p in parts), "rows_written": written["rows"],
                     "batch_rows": written["batch_rows"],
                     "bytes": sum(p["bytes"] for p in parts), "wall_sec": wall,
                     "incremental_from": prev_watermark,
                 }
-                lineage = {"version": 2, "snapshot_id": snapshot_id, "tier": tier,
-                           "input_fingerprint": input_fingerprint, **metrics, "partitions": parts}
-                with open(os.path.join(self.root, "lineage", f"{snapshot_id}.json"), "w") as f:
-                    json.dump(lineage, f, indent=2)
+                snapshot_id = self._record("rollup", tier, input_fingerprint=input_fingerprint,
+                                           **metrics, partitions=parts)
 
                 # commit AFTER data + lineage land (crash before this line →
                 # tier is simply recomputed on the next run)
@@ -285,7 +324,7 @@ class RollupPipeline:
     def read_tier(self, tier: str) -> DataFrame:
         if tier not in TIERS:
             raise ValueError(f"unknown tier {tier!r}")
-        return self.spark.read.parquet(os.path.join(self.root, f"tier={tier}"))
+        return self.spark.read.parquet(self._tier_path(tier))
 
     def compact_tier(
         self, tier: str, max_files_per_partition: int = 1, min_files_to_compact: int = 2
@@ -295,29 +334,22 @@ class RollupPipeline:
         The tier pipeline's own writes are already 1 file per p_date
         (repartition('p_date') before write), so this is a no-op unless a
         partition was produced by an external writer or an old layout —
-        the append-mode surfaces (raw-turns store, cold archive) are where
-        compaction routinely fires; use compact_partitions directly there.
+        the multi-file surfaces (append-mode raw-turns store, cold archive)
+        are where compaction routinely fires; use compact_partitions
+        directly there.
         """
         report = compact_partitions(
             self.spark,
-            os.path.join(self.root, f"tier={tier}"),
+            self._tier_path(tier),
             max_files_per_partition=max_files_per_partition,
             min_files_to_compact=min_files_to_compact,
         )
         report["tier"] = tier
         if report["compacted"]:
-            snapshot_id = f"compact-{tier}-{uuid.uuid4().hex[:12]}"
-            lineage = {
-                "snapshot_id": snapshot_id,
-                "tier": tier,
-                "op": "compact",
-                "partitions": report["compacted"],
-                "files_before": report["files_before"],
-                "files_after": report["files_after"],
-            }
-            with open(os.path.join(self.root, "lineage", f"{snapshot_id}.json"), "w") as f:
-                json.dump(lineage, f, indent=2)
-            report["snapshot_id"] = snapshot_id
+            report["snapshot_id"] = self._record(
+                "compact", tier, partitions=report["compacted"],
+                files_before=report["files_before"], files_after=report["files_after"],
+            )
         return report
 
 
@@ -344,14 +376,15 @@ def compact_partitions(
 ) -> dict:
     """Merge small files inside each hive partition of a parquet layout —
     the small-file problem: append-mode writers (incremental raw-turn
-    ingests, per-expiry archive runs) each leave their own task files, and
+    ingests) and multi-task writers (the cold archive) leave many task files, and
     at 100 TB a scan's task count and listing cost are driven by FILE
     count, not bytes.
 
     Per-partition, all-or-nothing: each partition dir with >=
     `min_files_to_compact` parquet files is rewritten to
     `max_files_per_partition` files via coalesce into a hidden `.compact-*`
-    temp dir, verified by row count, then swapped with two renames
+    temp dir, verified by row count (the footer row sums of the source and
+    the temp dir's files; no data is read back), then swapped with two renames
     (`part -> part.old`, `tmp -> part`). The swap is NOT a single atomic
     operation: a crash can land in three states, all of which the NEXT run
     heals before scanning — (1) only `.compact-*` temp left: removed
@@ -375,9 +408,6 @@ def compact_partitions(
     if not os.path.isdir(root):
         return {"compacted": [], "files_before": 0, "files_after": 0}
 
-    def parquet_files(d: str) -> list[str]:
-        return [fn for fn in os.listdir(d) if fn.endswith(".parquet")]
-
     # heal leftovers of a previously-interrupted run (states 1-3 above)
     for name in sorted(os.listdir(root)):
         full = os.path.join(root, name)
@@ -399,16 +429,16 @@ def compact_partitions(
             continue
         if name.endswith(".old"):  # unreachable post-recovery; defensive
             continue  # pragma: no cover
-        files = parquet_files(part_dir)
+        files = _parquet_files(part_dir)
         report["files_before"] += len(files)
         if len(files) < max(min_files_to_compact, max_files_per_partition + 1):
             report["files_after"] += len(files)
             continue
-        src = spark.read.parquet(part_dir)
-        n_before = src.count()
+        n_before = _footer_rows(files)
         tmp_dir = os.path.join(root, f".compact-{name}-{uuid.uuid4().hex[:8]}")
-        src.coalesce(max_files_per_partition).write.mode("overwrite").parquet(tmp_dir)
-        n_after = spark.read.parquet(tmp_dir).count()
+        spark.read.parquet(part_dir).coalesce(max_files_per_partition) \
+            .write.mode("overwrite").parquet(tmp_dir)
+        n_after = _footer_rows(_parquet_files(tmp_dir))
         if n_after != n_before:  # pragma: no cover - defensive
             shutil.rmtree(tmp_dir)
             raise RuntimeError(
@@ -418,7 +448,7 @@ def compact_partitions(
         os.rename(part_dir, old_dir)
         os.rename(tmp_dir, part_dir)
         shutil.rmtree(old_dir)
-        report["files_after"] += len(parquet_files(part_dir))
+        report["files_after"] += len(_parquet_files(part_dir))
         report["compacted"].append(name.split("=", 1)[1])
     return report
 

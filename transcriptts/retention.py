@@ -14,16 +14,19 @@ rest out. `apply_retention` enforces a per-tier keep window over the
   2. if an `archive_root` is given, the expiring partitions (and only those
      — a `p_date`-pruned scan) are melted to long form and packed into
      Gorilla chunk blobs (`compress.compress_series`), one blob per
-     (conv_id, metric:stat, day), written append-mode under
-     `archive_root/tier=<t>/`;
-  3. the partition directories are deleted and a lineage record
-     (`expire-<id>.json`, same directory as run lineage) captures what was
-     dropped, what was archived, and the byte counts.
+     (conv_id, metric:stat, day), written under `archive_root/tier=<t>/`
+     with a dynamic partition overwrite: re-archiving a date replaces its
+     blobs, so a retry after a crash between archive and delete writes the
+     same blobs again instead of adding a second copy;
+  3. the partition directories are deleted and an `expire` lineage record
+     (`RollupPipeline._record`, next to the run lineage) captures what was
+     dropped (rows and bytes from the parquet footers) and what was archived.
 
 `restore_archive` is the inverse of the archive step: blobs → points →
-pivot back to the wide rollup schema. The roundtrip is bit-exact for every
-stat column (Gorilla XOR packing is lossless; tests assert equality), so
-expiry-with-archive never loses information, it only changes storage cost.
+pivot back to the wide rollup schema, with no dedup (the archive holds one
+blob per chunk). The roundtrip is bit-exact for every stat column (Gorilla
+XOR packing is lossless; tests assert equality), so expiry-with-archive
+never loses information, it only changes storage cost.
 
 Scale shape: the expiry decision is pure filesystem metadata; the archive
 job reads only the expiring partitions (partition-pruned scan), shuffles
@@ -34,15 +37,11 @@ decodable, so a later point lookup touches one chunk, not the archive.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
-import time
-import uuid
 from datetime import date, timedelta
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .compress import compress_series, decompress_series
@@ -50,29 +49,6 @@ from .pipeline import RollupPipeline
 
 # the wide per-bucket stats a tier row carries (rollup.py contract)
 STAT_COLS = ("cnt", "sum", "mean", "min", "max", "p50", "p99")
-
-_P_DATE_RE = re.compile(r"^p_date=(\d{4}-\d{2}-\d{2})$")
-
-
-def _tier_partitions(pipeline: RollupPipeline, tier: str) -> dict[str, str]:
-    """{p_date: dirpath} for a tier, from directory names only."""
-    root = os.path.join(pipeline.root, f"tier={tier}")
-    if not os.path.isdir(root):
-        return {}
-    out = {}
-    for name in os.listdir(root):
-        m = _P_DATE_RE.match(name)
-        if m:
-            out[m.group(1)] = os.path.join(root, name)
-    return out
-
-
-def _dir_bytes(path: str) -> int:
-    return sum(
-        os.path.getsize(os.path.join(dp, fn))
-        for dp, _, fns in os.walk(path)
-        for fn in fns
-    )
 
 
 def melt_stats(tier_df: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFrame:
@@ -123,67 +99,36 @@ def unmelt_stats(points: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataF
 
 
 def archive_partitions(
-    pipeline: RollupPipeline,
-    tier: str,
-    p_dates: list[str],
-    archive_root: str,
-    chunk_seconds: int = 86400,
+    pipeline: RollupPipeline, tier: str, p_dates: list[str], archive_root: str
 ) -> dict:
     """Compress the given p_date partitions of a tier into the cold store.
 
-    Returns {rows, points, raw_bytes, enc_bytes, chunks}. Append-mode write:
-    re-archiving the same p_date twice duplicates blobs — callers (expiry)
-    only pass partitions they are about to delete, which makes the operation
-    idempotent-by-construction in the crash-recovery sense: a crash between
-    archive and delete re-archives on retry, and `restore_archive`
-    deduplicates on (conv_id, metric, chunk) taking the newest blob.
+    Returns {chunks, points, raw_bytes, enc_bytes, path}, observed on the blob
+    write. Chunks are one day, so a chunk never spans two p_dates, and the
+    write overwrites exactly the p_date partitions it produces: archiving a
+    date twice leaves one blob per (conv_id, metric, chunk).
     """
     src = pipeline.read_tier(tier).where(F.col("p_date").cast("string").isin(p_dates))
-    run_stamp = int(time.time() * 1000)
+    obs = Observation()
     blobs = compress_series(
-        melt_stats(src), value_col="value", ts_col="bucket_start", chunk_seconds=chunk_seconds
-    ).withColumn("p_date", F.to_date("ts_min")).withColumn(
-        "archived_at_ms", F.lit(run_stamp)
+        melt_stats(src), value_col="value", ts_col="bucket_start", chunk_seconds=86400
+    ).observe(
+        obs, F.count("*").alias("chunks"), F.sum("n").alias("points"),
+        F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"),
     )
     out_path = os.path.join(archive_root, f"tier={tier}")
-    blobs.write.mode("append").partitionBy("p_date").parquet(out_path)
-    # report THIS run's output only: the re-read is p_date-pruned and then
-    # filtered to this run's stamp, so a crash-retry re-archive (which
-    # appends duplicate blobs for the same p_dates) cannot double-count
-    # chunks/points/bytes in the report
-    written = pipeline.spark.read.parquet(out_path).where(
-        F.col("p_date").cast("string").isin(p_dates)
-        & (F.col("archived_at_ms") == run_stamp)
-    )
-    stats = written.agg(
-        F.count("*").alias("chunks"),
-        F.sum("n").alias("points"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-    ).collect()[0]
-    return {
-        "chunks": stats["chunks"],
-        "points": stats["points"],
-        "raw_bytes": stats["raw_bytes"],
-        "enc_bytes": stats["enc_bytes"],
-        "path": out_path,
-    }
+    # per-write option, never a session conf (see RollupPipeline._update_convstate)
+    blobs.withColumn("p_date", F.to_date("ts_min")).write.partitionBy("p_date") \
+        .option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(out_path)
+    return {**obs.get, "path": out_path}
 
 
 def restore_archive(
     pipeline: RollupPipeline, archive_root: str, tier: str, stats: tuple[str, ...] = STAT_COLS
 ) -> DataFrame:
-    """Cold blobs → the tier's wide rollup schema (bit-exact roundtrip).
-
-    Duplicate blobs for the same (conv_id, metric, chunk) — possible after a
-    crash between archive and delete — resolve to the newest archived copy.
-    """
+    """Cold blobs → the tier's wide rollup schema (bit-exact roundtrip)."""
     blobs = pipeline.spark.read.parquet(os.path.join(archive_root, f"tier={tier}"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id", "metric", "chunk").orderBy(F.desc("archived_at_ms"))
-    latest = blobs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    return unmelt_stats(decompress_series(latest), stats)
+    return unmelt_stats(decompress_series(blobs), stats)
 
 
 def apply_retention(
@@ -208,12 +153,11 @@ def apply_retention(
         if keep_days is None:
             continue
         cutoff = now - timedelta(days=keep_days)
-        parts = _tier_partitions(pipeline, tier)
-        expiring = sorted(d for d in parts if date.fromisoformat(d) < cutoff)
+        parts = pipeline._partitions(tier)
+        expiring = [d for d in parts if date.fromisoformat(d) < cutoff]
         if not expiring:
             continue
-        snapshot_id = f"expire-{tier}-{uuid.uuid4().hex[:12]}"
-        freed = sum(_dir_bytes(parts[d]) for d in expiring)
+        dropped = pipeline._partition_stats(tier, expiring)
 
         archived = None
         if archive_root is not None:
@@ -223,17 +167,11 @@ def apply_retention(
         for d in expiring:
             shutil.rmtree(parts[d])
 
-        lineage = {
-            "snapshot_id": snapshot_id,
-            "tier": tier,
-            "op": "expire",
-            "cutoff": str(cutoff),
-            "partitions_dropped": expiring,
-            "bytes_freed": freed,
-            "archive": archived,
-        }
-        with open(os.path.join(pipeline.root, "lineage", f"{snapshot_id}.json"), "w") as f:
-            json.dump(lineage, f, indent=2)
+        snapshot_id = pipeline._record(
+            "expire", tier, cutoff=str(cutoff), partitions_dropped=expiring,
+            rows_dropped=sum(p["rows"] for p in dropped),
+            bytes_freed=sum(p["bytes"] for p in dropped), archive=archived,
+        )
 
         entry = state["tiers"].setdefault(tier, {})
         entry["retention_cutoff"] = str(cutoff)
