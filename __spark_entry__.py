@@ -850,48 +850,41 @@ def _q_nelder_mead_quadratic(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation's turn count, with the argmin on the exact-sixteenth
     lattice (mx, my are multiples of 1/16 — exact in binary AND at 4
     decimal digits, so rounding is engine-independent). The REAL simplex
-    kernel minimizes it inside mapInPandas (one Arrow batch of
-    conversations per partition — conversations are the parallelism unit,
-    as for PELT/Holt), and the oracle recomputes the argmin analytically.
+    kernel minimizes it once per conversation through `partitioning.per_row`
+    (conversations are the parallelism unit, as for PELT/Holt), and the oracle
+    recomputes the argmin analytically.
     4-dp rounding makes the hash comparison exact: with f_tol=1e-13 and
     stagnation detection disabled, NM lands within sqrt(f_tol/a) ≈ 3e-7 of
     the lattice point — two orders tighter than the 5e-5 rounding
     boundary (property-tested over n=1..2000 in tests/test_optimize.py)."""
     from transcriptts.optimize import Param, nelder_mead
+    from transcriptts.partitioning import per_row
 
     counts = _signal(spark, sf_dir).groupBy("conv_id").agg(F.count("*").alias("n"))
 
-    def run(batches):
-        import pandas as pd
+    def fit(n):
+        n = int(n)
+        a = float(n % 5 + 1)
+        b = float((n * 3) % 5 + 1)
+        c = float(n % 11)
+        mx = ((n % 29) - 14) / 16.0
+        my = (((n * 7 + 3) % 29) - 14) / 16.0
+        res = nelder_mead(
+            lambda p: a * (p["x"] - mx) ** 2 + b * (p["y"] - my) ** 2 + c,
+            [Param("x", -2.0, 2.0, 0.0), Param("y", -2.0, 2.0, 0.0)],
+            max_iterations=2000,
+            f_tol=1e-13,
+            x_tol=1e-8,
+            stagnation_eps=0.0,
+        )
+        return {
+            "xmin": [round(res.best_params["x"], 4)],
+            "ymin": [round(res.best_params["y"], 4)],
+            "fmin": [round(res.best_value, 4)],
+        }
 
-        for pdf in batches:
-            out = []
-            for cid, n in zip(pdf["conv_id"], pdf["n"]):
-                n = int(n)
-                a = float(n % 5 + 1)
-                b = float((n * 3) % 5 + 1)
-                c = float(n % 11)
-                mx = ((n % 29) - 14) / 16.0
-                my = (((n * 7 + 3) % 29) - 14) / 16.0
-                res = nelder_mead(
-                    lambda p: a * (p["x"] - mx) ** 2 + b * (p["y"] - my) ** 2 + c,
-                    [Param("x", -2.0, 2.0, 0.0), Param("y", -2.0, 2.0, 0.0)],
-                    max_iterations=2000,
-                    f_tol=1e-13,
-                    x_tol=1e-8,
-                    stagnation_eps=0.0,
-                )
-                out.append(
-                    (
-                        cid,
-                        round(res.best_params["x"], 4),
-                        round(res.best_params["y"], 4),
-                        round(res.best_value, 4),
-                    )
-                )
-            yield pd.DataFrame(out, columns=["conv_id", "xmin", "ymin", "fmin"])
-
-    return counts.mapInPandas(run, "conv_id string, xmin double, ymin double, fmin double")
+    return per_row(counts, ["conv_id"], ["n"], fit,
+                   "conv_id string, xmin double, ymin double, fmin double")
 
 
 _SQL_NELDER_MEAD = f"""
@@ -918,7 +911,7 @@ def _q_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", F.lit("value").alias("metric"), F.col("ts").alias("bucket_start"),
         F.col("value").alias("mean"),
     )
-    back = decompress_series(compress_series(t, value_col="mean", ts_col="bucket_start"))
+    back = decompress_series(compress_series(t, value_col="mean"))
     out = back.groupBy("conv_id").agg(
         F.count("value").alias("cnt"),
         F.sum("value").alias("sum"),
@@ -1418,7 +1411,7 @@ FROM s
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic synthetic media table → mapInPandas feature extraction.
+    """Deterministic synthetic media table → per-payload feature extraction.
     The decode is the documented stub; the Spark-side schema/batch contract
     is what this query locks down. Oracle: golden literals re-derived
     independently in _sql_media_features (DuckDB's sha256 is VARCHAR-only,
@@ -1451,7 +1444,7 @@ def _sql_media_features(n: int = 120, seed: int = 42) -> str:
     int.from_bytes for the little-endian uint32 (what np.frombuffer reads),
     and a struct round-trip for the float32 narrowing — so the comparison
     still verifies the whole Spark path: payload synthesis, Arrow batch
-    transport, mapInPandas extraction, schema, and the f0 value itself."""
+    transport, the per_row extraction, schema, and the f0 value itself."""
     import hashlib
     import struct
 
@@ -1476,8 +1469,8 @@ FROM (VALUES {vals}) AS v(media_id, kind, payload_bytes, f0)
 # an inclusive generate_series, matching F.sequence's inclusive upper bound.
 def _q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end: synth_audio writes genuine RIFF/PCM16
-    WAV payloads, audio_features decodes them (stdlib wave + numpy) inside
-    mapInPandas and computes features from the recovered samples. The oracle
+    WAV payloads, audio_features decodes them (stdlib wave + numpy) per
+    payload and computes features from the recovered samples. The oracle
     regenerates the identical waveform in SQL from the md5 sample derivation
     and recomputes every feature — so a hash match proves the WAV container
     roundtrip, the Arrow transport, and the feature math all agree."""
@@ -1520,8 +1513,8 @@ FROM l GROUP BY media_id
 
 def _q_media_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end: synth_images writes genuine binary PPM
-    (P6) payloads, image_features parses them (stdlib + numpy) inside
-    mapInPandas and computes per-channel sums + mean luma from the recovered
+    (P6) payloads, image_features parses them (stdlib + numpy) per payload
+    and computes per-channel sums + mean luma from the recovered
     pixels. The oracle regenerates the identical pixels in SQL from the md5
     derivation and recomputes every feature — a hash match proves the PPM
     container roundtrip, the Arrow transport, and the feature math agree."""
@@ -1563,7 +1556,7 @@ FROM px GROUP BY media_id
 def _q_media_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video decode end-to-end: synth_videos writes genuine YUV4MPEG2
     (Y4M, C444) streams, video_features parses header + FRAME markers
-    (stdlib + numpy) inside mapInPandas, samples every 2nd frame, and
+    (stdlib + numpy) per payload, samples every 2nd frame, and
     computes per-plane sums + mean luma from the recovered planes. The
     oracle regenerates the identical YUV bytes in SQL from the md5
     derivation and recomputes every feature — a hash match proves the Y4M

@@ -19,7 +19,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repo on PYTHONPATH before the JVM starts, so the Python workers it
+# forks import transcriptts from any working directory
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

@@ -28,9 +28,13 @@ def test_spark_roundtrip_bit_exact(rollup_1m):
 
 
 def test_chunking_bounds_blob_span(rollup_1m):
-    comp = compress_series(rollup_1m, chunk_seconds=3600)
+    """A chunk is one UTC day: it spans less than a day and never two dates
+    (the cold archive overwrites whole p_date partitions)."""
+    comp = compress_series(rollup_1m)
     bad = comp.where(
-        "unix_seconds(ts_max) - unix_seconds(ts_min) >= 3600 or n < 1"
+        "unix_seconds(ts_max) - unix_seconds(ts_min) >= 86400 or n < 1"
+        " or floor(unix_seconds(ts_min) / 86400) != chunk"
+        " or floor(unix_seconds(ts_max) / 86400) != chunk"
     ).count()
     assert bad == 0
 

@@ -179,9 +179,15 @@ def test_multimodal_feature_plumbing(spark):
 
 
 def test_multimodal_raise_stub(spark):
+    """A decoder that raises marks a codec as unavailable: the job fails
+    with its error."""
+
+    def unavailable(payload, kind):
+        raise NotImplementedError(f"no {kind} decoder here")
+
     media = M.synth_media(spark, n=3)
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        M.extract_features(media, decode_stub="raise").collect()
+    with pytest.raises(Exception, match="NotImplementedError: no (image|audio|video) decoder"):
+        M.extract_features(media, decoder=unavailable).collect()
 
 
 def test_frame_sample_plan(spark):

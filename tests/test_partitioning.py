@@ -1,5 +1,6 @@
-"""The per-series kernel runner: task width of every Python kernel stage, and
-its edge-case contract against `transcriptts.kernels` called in the test process."""
+"""The Python-stage runners: task width of every Python kernel stage, the
+per-series runner's edge-case contract against `transcriptts.kernels` called
+in the test process, and the per-row runner's output contract."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ from transcriptts.kernels import forecast as KF
 from transcriptts.kernels import smoothing as KS
 from transcriptts.kernels.cusum import cusum
 from transcriptts.kernels.pelt import pelt, select_penalty
-from transcriptts.partitioning import per_series, slot_width
+from transcriptts.partitioning import per_row, per_series, slot_width
 from transcriptts.smooth import smooth
 
 # physical operators that run Python code inside a stage
@@ -130,6 +131,17 @@ def test_gorilla_encode_and_restore_run_one_wave(session, tmp_path):
     _assert_one_wave(session, restore_archive(pipe, str(tmp_path / "cold"), "1h"))
 
 
+def test_groupby_fed_per_row_runs_one_wave(session):
+    """A per_row stage over an aggregate's output (the Nelder-Mead query's
+    shape) runs at most one task per slot, not one per shuffle partition."""
+    counts = _signal(session).groupBy("conv_id").agg(F.count("*").alias("n"))
+    out = per_row(counts, ["conv_id"], ["n"], lambda n: {"twice": [2 * n]},
+                  "conv_id string, twice long")
+    tasks = _python_stage_tasks(session, out)
+    assert tasks, "no Python stage ran"
+    assert max(tasks) <= session.sparkContext.defaultParallelism, tasks
+
+
 # --- runner edge cases, against the kernels called in the test process ------
 
 
@@ -230,3 +242,51 @@ def test_select_penalties_failure_rows_stay_null(spark):
     assert rows["ok"]["n_breakpoints"] == len(res.breakpoints)
     assert list(rows["ok"]["breakpoints"]) == list(res.breakpoints)
 
+
+
+# --- per_row output contract ---------------------------------------------------
+
+
+def _rows(spark):
+    return spark.createDataFrame(
+        [("a", 0), ("b", 2), ("c", 3)], "conv_id string, n int"
+    )
+
+
+def test_per_row_none_gives_no_rows_and_repeats_keys(spark):
+    got = per_row(
+        _rows(spark), ["conv_id"], ["n"],
+        lambda n: None if n == 0 else {"i": np.arange(n), "x": np.full(n, n / 2)},
+        "conv_id string, i long, x double",
+    ).collect()
+    assert sorted(tuple(r) for r in got) == [
+        ("b", 0, 1.0), ("b", 1, 1.0), ("c", 0, 1.5), ("c", 1, 1.5), ("c", 2, 1.5),
+    ]
+
+
+def test_per_row_array_column_keeps_one_element_per_row(spark):
+    got = per_row(
+        _rows(spark), ["conv_id"], ["n"],
+        lambda n: {"v": [[float(n)] * n], "k": [n]},
+        "conv_id string, v array<float>, k long",
+    ).collect()
+    assert {r["conv_id"]: (list(r["v"]), r["k"]) for r in got} == {
+        "a": ([], 0), "b": ([2.0, 2.0], 2), "c": ([3.0, 3.0, 3.0], 3),
+    }
+
+
+def test_per_row_empty_input_gives_empty_typed_result(spark):
+    out = per_row(
+        _rows(spark).where("n < 0"), ["conv_id"], ["n"], lambda n: {"x": [1.0]},
+        "conv_id string, x double",
+    )
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<conv_id:string,x:double>"
+
+
+def test_per_row_raising_fn_fails_the_job(spark):
+    def boom(n):
+        raise ValueError(f"bad row {n}")
+
+    with pytest.raises(Exception, match="ValueError: bad row"):
+        per_row(_rows(spark), ["conv_id"], ["n"], boom, "conv_id string, x double").collect()

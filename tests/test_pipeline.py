@@ -446,16 +446,39 @@ def test_mixed_watermarks_equal_full_recompute(spark, tmp_path):
         assert p.content_hash(t) == full.content_hash(t), t
 
 
+def test_ntz_input_reads_back_with_rollup_schema(spark, tmp_path):
+    """Tiers written from a timestamp_ntz input (full, then incremental with
+    seed rows) read back with ROLLUP_SCHEMA's types and the wall-clock values
+    of the same input as timestamps."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from transcriptts.schema import ROLLUP_SCHEMA
+
+    upto1, upto2, _ = _three_days()
+    ntz = lambda rows: _mk_turns(spark, rows).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    p = RollupPipeline(spark, str(tmp_path / "ntz"))
+    p.run(ntz(upto1))
+    assert p.run(ntz(upto2), incremental=True)["metrics"]["1m"]["incremental_from"]
+    ref = RollupPipeline(spark, str(tmp_path / "ltz"))
+    ref.run(_mk_turns(spark, upto2))
+    for t in ("1m", "1h", "1d"):
+        got = [(f.name, f.dataType) for f in p.read_tier(t).schema.fields]
+        assert got == [*((f.name, f.dataType) for f in ROLLUP_SCHEMA.fields),
+                       ("p_date", T.DateType())], t
+        assert p.content_hash(t) == ref.content_hash(t), t
+
+
 # Jobs of one incremental 3-tier run without a fingerprint (local[4], AQE):
 #   2  fingerprint scan (aggregate's shuffle-map job + result job)
-#   1  convstate footer read for the seed rows' schema
 #   2  shared batch: lag() window shuffle-map job, then the job that fills
 #      its cache
 #   6  per tier: repartition(p_date) shuffle-map job + write job (the rollup
 #      groupBy reuses the cached batch's conv_id partitioning)
 #   2  convstate update: the same two jobs
-# Reading a written tier back or rescanning raw per tier pushes it over.
-PIPELINE_JOB_BUDGET = 13
+# Tiers and convstate are read with declared schemas (no schema-inference
+# job). Reading a written tier back or rescanning raw per tier pushes it over.
+PIPELINE_JOB_BUDGET = 12
 
 
 def test_incremental_run_job_budget(spark, tmp_path, count_jobs):

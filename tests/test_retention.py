@@ -178,12 +178,12 @@ def test_archive_report_counts_only_this_run(spark, pipeline, tmp_path):
 
 
 # Jobs of apply_retention with an archive root, one expiring tier (local[4]):
-#   1  schema inference of the tier (read_tier)
 #   1  the Gorilla encode's exchange, shuffle-map job
 #   1  the blob write
-# The report comes from an Observation on that write and the expire record
-# from parquet footers; reading the archive back pushes it over.
-RETENTION_JOB_BUDGET = 3
+# read_tier declares the tier's schema (no schema-inference job), the report
+# comes from an Observation on the write and the expire record from parquet
+# footers; reading the archive back pushes it over.
+RETENTION_JOB_BUDGET = 2
 
 
 def test_retention_job_budget(spark, pipeline, tmp_path, count_jobs):

@@ -4,10 +4,12 @@
 into ONE row holding two binary blobs — XOR-packed values + delta-of-delta-
 packed bucket timestamps — plus chunk metadata (row count, ts range, raw and
 encoded byte sizes). `decompress_series` explodes blobs back into points;
-roundtrip is bit-exact.
+roundtrip is bit-exact. Encoding runs on `partitioning.per_series`, decoding
+on `partitioning.per_row`.
 
-Chunking: `chunk` = floor(bucket epoch / chunk_seconds) so one blob covers a
-bounded time range (default 1 day of 1m points = <=1440 points/blob). The
+Chunking: `chunk` = floor(bucket_start epoch / 86400), one UTC day, so a blob
+covers at most 1440 1m points and never spans two dates — the cold archive's
+`p_date` overwrite (retention.archive_partitions) relies on that. The
 grouping carries only (ts, value) pairs — Arrow-batched, no per-row Python.
 
 At 100 TB this is the storage win for cold data: a metronome-ish series
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .partitioning import per_series
+from .partitioning import per_row, per_series
 
 COMPRESSED_SCHEMA = (
     "conv_id string, metric string, chunk long, n int, "
@@ -29,22 +31,18 @@ COMPRESSED_SCHEMA = (
 )
 
 
-def compress_series(
-    df: DataFrame,
-    value_col: str = "mean",
-    ts_col: str = "bucket_start",
-    chunk_seconds: int = 86400,
-) -> DataFrame:
-    """Rollup points → one compressed chunk row per (conv_id, metric, chunk)."""
+def compress_series(df: DataFrame, value_col: str = "mean") -> DataFrame:
+    """Rollup points → one compressed chunk row per (conv_id, metric, day)."""
     import numpy as np
 
     from .kernels.gorilla import encode_floats, encode_timestamps
 
+    ts = F.col("bucket_start").cast("timestamp")
     base = df.select(
         "conv_id",
         "metric",
-        F.floor(F.unix_seconds(F.col(ts_col).cast("timestamp")) / chunk_seconds).alias("chunk"),
-        F.col(ts_col).cast("timestamp").alias("_ts"),
+        F.floor(F.unix_seconds(ts) / 86400).alias("chunk"),
+        ts.alias("_ts"),
         F.col(value_col).cast("double").alias("_v"),
     )
 
@@ -71,36 +69,17 @@ def compress_series(
 
 def decompress_series(df: DataFrame) -> DataFrame:
     """Compressed chunks → (conv_id, metric, bucket_start, value) points."""
-    import numpy as np
-    import pandas as pd
-
     from .kernels.gorilla import decode_floats, decode_timestamps
 
-    def unpack(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one output frame per Arrow batch (np.repeat for the id columns),
-        # not one pandas frame per chunk row
-        ts_list = [decode_timestamps(bytes(b)) for b in pdf["ts_blob"]]
-        val_list = [decode_floats(bytes(b)) for b in pdf["val_blob"]]
-        if not ts_list:
-            return pd.DataFrame(
-                {"conv_id": pd.Series(dtype=str), "metric": pd.Series(dtype=str),
-                 "bucket_start": pd.Series(dtype="datetime64[us]"),
-                 "value": pd.Series(dtype=np.float64)}
-            )
-        ns = np.array([len(t) for t in ts_list])
-        return pd.DataFrame(
-            {
-                "conv_id": np.repeat(pdf["conv_id"].to_numpy(), ns),
-                "metric": np.repeat(pdf["metric"].to_numpy(), ns),
-                "bucket_start": np.concatenate(ts_list).astype("datetime64[us]"),
-                "value": np.concatenate(val_list),
-            }
-        )
+    # each chunk row decodes independently: no shuffle, one task wave
+    def unpack(ts_blob, val_blob):
+        return {
+            "bucket_start": decode_timestamps(bytes(ts_blob)).astype("datetime64[us]"),
+            "value": decode_floats(bytes(val_blob)),
+        }
 
-    # each chunk row explodes independently, so no shuffle: a coalesce to the
-    # task slots runs the Python stage in one wave (partitioning.py)
-    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism).mapInPandas(
-        lambda it: (unpack(pdf) for pdf in it),
+    return per_row(
+        df, ["conv_id", "metric"], ["ts_blob", "val_blob"], unpack,
         "conv_id string, metric string, bucket_start timestamp, value double",
     )
 

@@ -6,23 +6,25 @@ signatures) is real and tested. THREE modalities decode for REAL with stdlib
 only: PCM16 WAV audio (`decode_wav`/`audio_features`), binary-PPM images
 (`decode_ppm`/`image_features`), and Y4M/C444 video
 (`decode_y4m`/`video_features`). Codecs needing external libraries
-(PNG/JPEG, h264/vp9) remain STUBBED behind two swappable paths:
+(PNG/JPEG, h264/vp9) remain STUBBED behind `extract_features`' `decoder=`
+seam: with no decoder it derives a deterministic fixed-size feature vector
+from the payload bytes (sha-seeded), so the full pipeline (schema, batching,
+downstream joins) runs end-to-end and is reproducible; a real decoder
+(PIL/librosa/pyav) plugs in there, and a decoder that raises marks a codec
+as unavailable (the job fails with its error).
 
-- `decode_stub='fake'` (default): deterministic pseudo-decode that derives a
-  fixed-size feature vector from the payload bytes (sha-seeded), so the full
-  pipeline (schema, batching, downstream joins) runs end-to-end and is
-  reproducible;
-- `decode_stub='raise'`: NotImplementedError at first batch, marking exactly
-  where a real decoder (PIL/librosa/pyav) plugs in.
-
-The UDFs are `mapInPandas` over Arrow batches: payloads never become
-per-row Python calls, and `spark.sql.execution.arrow.maxRecordsPerBatch`
-bounds decoder memory (large payloads → set it low)."""
+Each extractor is a per-payload record function run by
+`partitioning.per_row`: payloads reach Python as Arrow batches in one task
+wave, non-matching kinds are filtered JVM-side, and
+`spark.sql.execution.arrow.maxRecordsPerBatch` bounds decoder memory (large
+payloads → set it low)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .partitioning import per_row
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -52,8 +54,9 @@ def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM):
-    """Deterministic stand-in for a real feature extractor."""
+def _fake_features(payload: bytes, kind: str | None = None, dim: int = FEATURE_DIM):
+    """Deterministic stand-in for a real feature extractor (the default
+    `decoder` of extract_features; `kind` is ignored)."""
     import hashlib
 
     import numpy as np
@@ -63,46 +66,27 @@ def _fake_features(payload: bytes, dim: int = FEATURE_DIM):
     return (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
 
 
-def extract_features(df: DataFrame, decode_stub: str | None = "fake", decoder=None) -> DataFrame:
-    """(media_id, kind, feature array<float>, payload_bytes) via mapInPandas.
+def extract_features(df: DataFrame, decoder=None) -> DataFrame:
+    """(media_id, kind, feature array<float>, payload_bytes), one row per payload.
 
     `decoder` is the PUBLIC seam for a real feature extractor: any callable
     `(payload: bytes, kind: str) -> sequence of FEATURE_DIM floats` (it must
     be picklable — module-level function or functools.partial — since it
-    ships to executors). When omitted, `decode_stub` selects the sandbox
-    behavior: 'fake' (deterministic sha-derived features, keeps the full
-    pipeline runnable) or 'raise' (NotImplementedError at first batch,
-    marking where PIL/librosa/pyav plugs in). The Spark-side contract
-    (schema, Arrow batching, partitioning) is identical on every path."""
-    import pandas as pd
+    ships to executors). None means the deterministic sha-derived fake
+    features, which keep the full pipeline runnable; a decoder that raises
+    (e.g. NotImplementedError where PIL/librosa/pyav would plug in) fails the
+    job. The Spark-side contract (schema, Arrow batching, partitioning) is
+    identical on every path."""
+    decode = decoder or _fake_features
 
-    if decoder is None and decode_stub not in ("fake", "raise"):
-        raise ValueError("decode_stub must be 'fake' or 'raise' (or pass decoder=...)")
+    def record(payload, kind):
+        payload = bytes(payload)
+        return {"feature": [[float(v) for v in decode(payload, kind)]],
+                "payload_bytes": [len(payload)]}
 
-    def run(batches):
-        for pdf in batches:
-            if decoder is not None:
-                feats = [
-                    list(map(float, decoder(bytes(p), k)))
-                    for p, k in zip(pdf["payload"], pdf["kind"])
-                ]
-            elif decode_stub == "raise":
-                raise NotImplementedError(
-                    "real media decode requires PIL/librosa/pyav — not available in this environment"
-                )
-            else:
-                feats = [_fake_features(bytes(p)).tolist() for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                    "payload_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
-    return df.mapInPandas(
-        run, "media_id long, kind string, feature array<float>, payload_bytes long"
+    return per_row(
+        df, ["media_id", "kind"], ["payload", "kind"], record,
+        "media_id long, kind string, feature array<float>, payload_bytes long",
     )
 
 
@@ -199,42 +183,26 @@ def wav_feature_decoder(payload: bytes, kind: str) -> list:
 def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip audio features computed from ACTUALLY-DECODED samples (not
     payload hashes): duration, mean amplitude, RMS, peak, zero-crossing
-    count. mapInPandas over Arrow batches — payloads stay columnar into
-    Python, never per-row JVM round-trips; `arrow.maxRecordsPerBatch` bounds
-    decoder memory for large clips. Non-audio rows are filtered JVM-side so
-    the decode UDF only ever sees WAV bytes."""
-    import pandas as pd
+    count. Non-audio rows are filtered JVM-side so the decode only ever sees
+    WAV bytes; `arrow.maxRecordsPerBatch` bounds decoder memory for large
+    clips."""
+    import numpy as np
 
-    def run(batches):
-        import numpy as np
+    def record(payload):
+        x, sr = decode_wav(bytes(payload))
+        n = len(x)
+        return {
+            "n_samples": [n],
+            "sample_rate": [sr],
+            "duration_s": [n / float(sr)],
+            "mean_amp": [float(x.mean()) if n else 0.0],
+            "rms": [float(np.sqrt((x * x).mean())) if n else 0.0],
+            "peak": [float(np.abs(x).max()) if n else 0.0],
+            "zero_crossings": [int(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0)))],
+        }
 
-        for pdf in batches:
-            mids, ns, srs, durs, means, rmss, peaks, zcs = [], [], [], [], [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                x, sr = decode_wav(bytes(p))
-                n = len(x)
-                mids.append(mid)
-                ns.append(n)
-                srs.append(sr)
-                durs.append(n / float(sr))
-                means.append(float(x.mean()) if n else 0.0)
-                rmss.append(float(np.sqrt((x * x).mean())) if n else 0.0)
-                peaks.append(float(np.abs(x).max()) if n else 0.0)
-                zcs.append(int(np.count_nonzero((x[1:] < 0) != (x[:-1] < 0))))
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "n_samples": ns,
-                    "sample_rate": srs,
-                    "duration_s": durs,
-                    "mean_amp": means,
-                    "rms": rmss,
-                    "peak": peaks,
-                    "zero_crossings": zcs,
-                }
-            )
-
-    return df.where(F.col("kind") == "audio").mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    audio = df.where(F.col("kind") == "audio")
+    return per_row(audio, ["media_id"], ["payload"], record, AUDIO_FEATURE_SCHEMA)
 
 
 # --- real image path (binary PPM/P6: stdlib-parsable, no external libs) ------
@@ -324,38 +292,29 @@ def ppm_feature_decoder(payload: bytes, kind: str) -> list:
 def image_features(df: DataFrame) -> DataFrame:
     """Per-image features computed from ACTUALLY-DECODED pixels (not payload
     hashes): dimensions, exact per-channel integer sums, and mean luma
-    (ITU-R BT.601: 0.299 r + 0.587 g + 0.114 b). mapInPandas over Arrow
-    batches — payloads stay columnar into Python; non-image rows are
-    filtered JVM-side so the decode UDF only ever sees PPM bytes."""
-    import pandas as pd
+    (ITU-R BT.601: 0.299 r + 0.587 g + 0.114 b). Non-image rows are filtered
+    JVM-side so the decode only ever sees PPM bytes."""
+    import numpy as np
 
-    def run(batches):
-        import numpy as np
+    def record(payload):
+        arr = decode_ppm(bytes(payload)).astype(np.int64)
+        sr, sg, sb = (int(arr[:, :, c].sum()) for c in range(3))
+        n = arr.shape[0] * arr.shape[1]
+        # exact integer milli-luma sum, ONE double division — keeps the value
+        # bit-reproducible across engines (oracle parity)
+        luma_milli = 299 * sr + 587 * sg + 114 * sb
+        return {
+            "width": [arr.shape[1]],
+            "height": [arr.shape[0]],
+            "n_pixels": [n],
+            "sum_r": [sr],
+            "sum_g": [sg],
+            "sum_b": [sb],
+            "mean_luma": [luma_milli / (1000.0 * n)],
+        }
 
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_ppm(bytes(p)).astype(np.int64)
-                sr, sg, sb = (int(arr[:, :, c].sum()) for c in range(3))
-                n = arr.shape[0] * arr.shape[1]
-                # exact integer milli-luma sum, ONE double division — keeps
-                # the value bit-reproducible across engines (oracle parity)
-                luma_milli = 299 * sr + 587 * sg + 114 * sb
-                recs.append(
-                    {
-                        "media_id": mid,
-                        "width": arr.shape[1],
-                        "height": arr.shape[0],
-                        "n_pixels": n,
-                        "sum_r": sr,
-                        "sum_g": sg,
-                        "sum_b": sb,
-                        "mean_luma": luma_milli / (1000.0 * n),
-                    }
-                )
-            yield pd.DataFrame.from_records(recs)
-
-    return df.where(F.col("kind") == "image").mapInPandas(run, IMAGE_FEATURE_SCHEMA)
+    images = df.where(F.col("kind") == "image")
+    return per_row(images, ["media_id"], ["payload"], record, IMAGE_FEATURE_SCHEMA)
 
 
 # --- real video path (YUV4MPEG2/Y4M: stdlib-parsable, no external libs) ------
@@ -461,40 +420,32 @@ def video_features(df: DataFrame, every_n: int = 2) -> DataFrame:
     """Per-video features computed from ACTUALLY-DECODED frames (not payload
     hashes), over a sampled subset of frames (every `every_n`-th, same
     inclusive stride as frame_sample_plan): dimensions, frame counts, exact
-    per-plane integer sums, and mean luma of the sampled frames. mapInPandas
-    over Arrow batches — payloads stay columnar into Python and
+    per-plane integer sums, and mean luma of the sampled frames.
     `arrow.maxRecordsPerBatch` bounds decoder memory (one batch holds at most
     that many full videos); non-video rows are filtered JVM-side so the
-    decode UDF only ever sees Y4M bytes."""
-    import pandas as pd
+    decode only ever sees Y4M bytes."""
 
-    def run(batches):
-        for pdf in batches:
-            recs = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_y4m(bytes(p))
-                nf, _, h, w = arr.shape
-                sampled = arr[::every_n].astype("int64")
-                ns = sampled.shape[0]
-                sy, su, sv = (int(sampled[:, c].sum()) for c in range(3))
-                recs.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "n_frames": nf,
-                        "n_sampled": ns,
-                        "sum_y": sy,
-                        "sum_u": su,
-                        "sum_v": sv,
-                        # exact integer sum, ONE double division — keeps the
-                        # value bit-reproducible across engines (oracle parity)
-                        "mean_y": sy / (1.0 * ns * w * h) if ns else 0.0,
-                    }
-                )
-            yield pd.DataFrame.from_records(recs)
+    def record(payload):
+        arr = decode_y4m(bytes(payload))
+        nf, _, h, w = arr.shape
+        sampled = arr[::every_n].astype("int64")
+        ns = sampled.shape[0]
+        sy, su, sv = (int(sampled[:, c].sum()) for c in range(3))
+        return {
+            "width": [w],
+            "height": [h],
+            "n_frames": [nf],
+            "n_sampled": [ns],
+            "sum_y": [sy],
+            "sum_u": [su],
+            "sum_v": [sv],
+            # exact integer sum, ONE double division — keeps the value
+            # bit-reproducible across engines (oracle parity)
+            "mean_y": [sy / (1.0 * ns * w * h) if ns else 0.0],
+        }
 
-    return df.where(F.col("kind") == "video").mapInPandas(run, VIDEO_FEATURE_SCHEMA)
+    videos = df.where(F.col("kind") == "video")
+    return per_row(videos, ["media_id"], ["payload"], record, VIDEO_FEATURE_SCHEMA)
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:

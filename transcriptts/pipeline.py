@@ -63,10 +63,14 @@ from datetime import datetime
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from .rollup import rollup, with_derived_metrics
-from .schema import TIERS
+from .schema import ROLLUP_SCHEMA, TIERS
+
+# tiers are read with their declared schema: no schema-inference job
+_TIER_SCHEMA = T.StructType([*ROLLUP_SCHEMA.fields, T.StructField("p_date", T.DateType())])
 
 
 def _cutoff(watermark: str):
@@ -155,6 +159,10 @@ class RollupPipeline:
     def _convstate_path(self) -> str:
         return os.path.join(self.root, "convstate")
 
+    # read with this declared schema (no schema-inference job); the seed rows
+    # are cast back to the batch's column types
+    _CONVSTATE_SCHEMA = "conv_id string, last_ts timestamp, last_turn_idx long, p_date date"
+
     def _update_convstate(self, turns: DataFrame, incremental_dates: bool) -> None:
         """Upsert (conv_id, p_date) -> last turn of that date. `turns` is the
         run's derived batch (cutoff-filtered when every tier is incremental),
@@ -188,7 +196,7 @@ class RollupPipeline:
         is preserved."""
         if not os.path.exists(self._convstate_path):
             return None
-        st = self.spark.read.parquet(self._convstate_path).where(
+        st = self.spark.read.schema(self._CONVSTATE_SCHEMA).parquet(self._convstate_path).where(
             F.col("p_date") < F.to_date(F.lit(cutoff))
         )
         return (
@@ -214,7 +222,8 @@ class RollupPipeline:
         after = F.col("ts") >= _cutoff(watermark)
         src = transcripts.select("conv_id", "turn_idx", "text", "ts").where(after)
         seeds = self._seed_rows(watermark)
-        batch = src if seeds is None else src.unionByName(seeds)
+        batch = src if seeds is None else src.unionByName(
+            seeds.select(*(F.col(f.name).cast(f.dataType) for f in src.schema)))
         return with_derived_metrics(batch).select(*self._DERIVED).where(after)
 
     def run(
@@ -324,7 +333,7 @@ class RollupPipeline:
     def read_tier(self, tier: str) -> DataFrame:
         if tier not in TIERS:
             raise ValueError(f"unknown tier {tier!r}")
-        return self.spark.read.parquet(self._tier_path(tier))
+        return self.spark.read.schema(_TIER_SCHEMA).parquet(self._tier_path(tier))
 
     def compact_tier(
         self, tier: str, max_files_per_partition: int = 1, min_files_to_compact: int = 2

@@ -44,14 +44,16 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .compress import compress_series, decompress_series
+from .compress import COMPRESSED_SCHEMA, compress_series, decompress_series
 from .pipeline import RollupPipeline
+from .schema import ROLLUP_SCHEMA
 
-# the wide per-bucket stats a tier row carries (rollup.py contract)
-STAT_COLS = ("cnt", "sum", "mean", "min", "max", "p50", "p99")
+# the wide per-bucket stats a tier row carries
+STAT_COLS = tuple(f.name for f in ROLLUP_SCHEMA.fields
+                  if f.name not in ("conv_id", "bucket_start", "metric"))
 
 
-def melt_stats(tier_df: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFrame:
+def melt_stats(tier_df: DataFrame) -> DataFrame:
     """Wide rollup rows → long (conv_id, metric:stat, bucket_start, value).
 
     One `stack` projection (zero shuffle); the composite metric key keeps
@@ -65,11 +67,10 @@ def melt_stats(tier_df: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFr
     exact for nullable stats too (a bucket always keeps at least its cnt
     point — counts are never NULL — so no bucket ever disappears
     entirely)."""
-    n = len(stats)
-    pairs = ", ".join(f"'{s}', cast(`{s}` as double)" for s in stats)
+    pairs = ", ".join(f"'{s}', cast(`{s}` as double)" for s in STAT_COLS)
     return (
         tier_df.selectExpr(
-            "conv_id", "metric", "bucket_start", f"stack({n}, {pairs}) as (stat, value)"
+            "conv_id", "metric", "bucket_start", f"stack({len(STAT_COLS)}, {pairs}) as (stat, value)"
         )
         .where(F.col("value").isNotNull())
         .select(
@@ -81,7 +82,7 @@ def melt_stats(tier_df: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFr
     )
 
 
-def unmelt_stats(points: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataFrame:
+def unmelt_stats(points: DataFrame) -> DataFrame:
     """Inverse of melt_stats: long points → wide rollup rows."""
     split = points.select(
         "conv_id",
@@ -92,7 +93,7 @@ def unmelt_stats(points: DataFrame, stats: tuple[str, ...] = STAT_COLS) -> DataF
     )
     wide = (
         split.groupBy("conv_id", "metric", "bucket_start")
-        .pivot("stat", list(stats))
+        .pivot("stat", list(STAT_COLS))
         .agg(F.first("value"))
     )
     return wide.withColumn("cnt", F.col("cnt").cast("bigint"))
@@ -110,9 +111,7 @@ def archive_partitions(
     """
     src = pipeline.read_tier(tier).where(F.col("p_date").cast("string").isin(p_dates))
     obs = Observation()
-    blobs = compress_series(
-        melt_stats(src), value_col="value", ts_col="bucket_start", chunk_seconds=86400
-    ).observe(
+    blobs = compress_series(melt_stats(src), value_col="value").observe(
         obs, F.count("*").alias("chunks"), F.sum("n").alias("points"),
         F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"),
     )
@@ -123,12 +122,11 @@ def archive_partitions(
     return {**obs.get, "path": out_path}
 
 
-def restore_archive(
-    pipeline: RollupPipeline, archive_root: str, tier: str, stats: tuple[str, ...] = STAT_COLS
-) -> DataFrame:
+def restore_archive(pipeline: RollupPipeline, archive_root: str, tier: str) -> DataFrame:
     """Cold blobs → the tier's wide rollup schema (bit-exact roundtrip)."""
-    blobs = pipeline.spark.read.parquet(os.path.join(archive_root, f"tier={tier}"))
-    return unmelt_stats(decompress_series(blobs), stats)
+    blobs = pipeline.spark.read.schema(f"{COMPRESSED_SCHEMA}, p_date date") \
+        .parquet(os.path.join(archive_root, f"tier={tier}"))
+    return unmelt_stats(decompress_series(blobs))
 
 
 def apply_retention(

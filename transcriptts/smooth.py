@@ -9,7 +9,12 @@ Two execution paths, same semantics:
   the only path for EMA/Savitzky-Golay, which are sequential/edge-quirky.
 - ``sma_window(df, w)`` — pure Catalyst sliding-window average ('valid'
   mode), for when smoothing is fused into a larger plan: no Python at all,
-  whole-stage codegen, incremental frame evaluation.
+  whole-stage codegen, incremental frame evaluation. It stays beside
+  ``smooth(kind="sma")`` because it is the faster SMA path: on the sf0.1
+  signal at local[4] (4 cores; one warm-up, then 6 alternating passes each)
+  its median wall was 0.79 s against 1.02 s for ``smooth(kind="sma",
+  window_size=5)``, it won 6 of 6 pairs (a repeat gave 0.59 s against
+  0.72 s, again 6 of 6), and the 6-dp outputs were identical on 94,000 rows.
 
 Output shape for both: (conv_id, pos, value) where pos is the 0-based output
 index — 'valid'-mode kernels legitimately shrink the series, so positions,
