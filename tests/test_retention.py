@@ -83,6 +83,9 @@ def test_expiry_drops_old_partitions_and_archives_bit_exact(spark, pipeline, tmp
     assert lineage["partitions_dropped"] == expected_expired
     assert lineage["bytes_freed"] > 0
     assert lineage["archive"]["enc_bytes"] > 0
+    # one archive file per expired date, its on-disk bytes next to enc_bytes
+    assert lineage["archive"]["files"] == len(expected_expired)
+    assert lineage["archive"]["bytes"] > 0
     # the shared record format, and rows_dropped from the dropped footers
     assert lineage["version"] == 2
     assert (lineage["snapshot_id"], lineage["tier"]) == (snap, "1h")
@@ -179,11 +182,12 @@ def test_archive_report_counts_only_this_run(spark, pipeline, tmp_path):
 
 # Jobs of apply_retention with an archive root, one expiring tier (local[4]):
 #   1  the Gorilla encode's exchange, shuffle-map job
+#   1  the p_date exchange (one file per archived date), shuffle-map job
 #   1  the blob write
 # read_tier declares the tier's schema (no schema-inference job), the report
-# comes from an Observation on the write and the expire record from parquet
-# footers; reading the archive back pushes it over.
-RETENTION_JOB_BUDGET = 2
+# comes from an Observation on the write and from file sizes, the expire
+# record from parquet footers; reading the archive back pushes it over.
+RETENTION_JOB_BUDGET = 3
 
 
 def test_retention_job_budget(spark, pipeline, tmp_path, count_jobs):
@@ -204,3 +208,58 @@ def test_archive_scan_is_partition_pruned(spark, pipeline, tmp_path):
     src = pipeline.read_tier("1h").where(F.col("p_date").cast("string").isin(dates[:1]))
     plan = src._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "p_date" in plan
+
+
+def _archive_files(path):
+    """{p_date: [parquet file names]} of one tier's archive directory."""
+    return {d.split("=", 1)[1]: sorted(f for f in os.listdir(os.path.join(path, d))
+                                       if f.endswith(".parquet"))
+            for d in os.listdir(path) if d.startswith("p_date=")}
+
+
+def test_archive_one_file_per_date(spark, pipeline, tmp_path):
+    """One archive pass over several dates writes exactly one parquet file
+    per p_date (at local[4] the encode has four tasks, each holding blobs of
+    every date), and re-archiving a date replaces its file. The report's
+    files and bytes are those of the written dates."""
+    from transcriptts.retention import archive_partitions
+
+    dates = _p_dates(pipeline, "1h")[:3]
+    arch = str(tmp_path / "cold")
+    rep = archive_partitions(pipeline, "1h", dates, arch)
+    files = _archive_files(rep["path"])
+    assert sorted(files) == dates
+    assert all(len(f) == 1 for f in files.values()), files
+    assert rep["files"] == len(dates)
+    assert rep["bytes"] == sum(os.path.getsize(os.path.join(rep["path"], f"p_date={d}", f[0]))
+                               for d, f in files.items())
+
+    again = archive_partitions(pipeline, "1h", dates[1:2], arch)
+    after = _archive_files(rep["path"])
+    assert sorted(after) == dates and all(len(f) == 1 for f in after.values()), after
+    assert after[dates[0]] == files[dates[0]] and after[dates[2]] == files[dates[2]]
+    assert again["files"] == 1
+
+
+def test_retention_defaults_to_utc_date(spark, pipeline, monkeypatch):
+    """now=None is today's UTC date, the calendar p_date uses. The clock is
+    fixed at 23:30 UTC on the day after the last partition, and the host's
+    zone at UTC+14, where it is already the day after that: a local date
+    would expire the last partition too."""
+    import time
+
+    dates = _p_dates(pipeline, "1d")
+    day_after = dt.date.fromisoformat(dates[-1]) + dt.timedelta(days=1)
+    clock = dt.datetime.combine(day_after, dt.time(23, 30), dt.timezone.utc).timestamp()
+    monkeypatch.setattr(time, "time", lambda: clock)
+    monkeypatch.setenv("TZ", "Etc/GMT-14")  # POSIX sign: UTC+14
+    time.tzset()
+    try:
+        assert dt.date.today() == day_after + dt.timedelta(days=1)
+        report = apply_retention(pipeline, {"1d": 1})
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert report["expired"]["1d"] == dates[:-1]
+    assert _p_dates(pipeline, "1d") == [dates[-1]]
+    assert pipeline.load_state()["tiers"]["1d"]["retention_cutoff"] == dates[-1]

@@ -12,9 +12,14 @@ covers at most 1440 1m points and never spans two dates — the cold archive's
 `p_date` overwrite (retention.archive_partitions) relies on that. The
 grouping carries only (ts, value) pairs — Arrow-batched, no per-row Python.
 
-At 100 TB this is the storage win for cold data: a metronome-ish series
-packs ~60-80x for timestamps and 5-20x for values; blobs stay individually
-decodable so point lookups only touch the covering chunk.
+Measured on-disk cost, the 1m tier's cold archive on the maintain benchmark
+(seed 7, local[4], 5 archived days, 136,570 points): a raw point is 16 B
+(timestamp + double) and the Gorilla blobs hold 3.80 B per point (enc_bytes).
+Written as four snappy files per date (one per writer task), the archive
+took 3.28 B per point on disk; as one zstd file per date
+(retention.archive_partitions, get_spark's codec) it takes 1.85 B per point,
+less per day than the 1m tier it replaces. Blobs stay individually
+decodable, so point lookups only touch the covering chunk.
 """
 
 from __future__ import annotations

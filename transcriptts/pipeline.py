@@ -343,9 +343,8 @@ class RollupPipeline:
         The tier pipeline's own writes are already 1 file per p_date
         (repartition('p_date') before write), so this is a no-op unless a
         partition was produced by an external writer or an old layout —
-        the multi-file surfaces (append-mode raw-turns store, cold archive)
-        are where compaction routinely fires; use compact_partitions
-        directly there.
+        the append-mode raw-turns store is where compaction routinely
+        fires; use compact_partitions directly there.
         """
         report = compact_partitions(
             self.spark,
@@ -385,9 +384,9 @@ def compact_partitions(
 ) -> dict:
     """Merge small files inside each hive partition of a parquet layout —
     the small-file problem: append-mode writers (incremental raw-turn
-    ingests) and multi-task writers (the cold archive) leave many task files, and
-    at 100 TB a scan's task count and listing cost are driven by FILE
-    count, not bytes.
+    ingests) and archives written before it was one file per date leave
+    many task files, and at 100 TB a scan's task count and listing cost
+    are driven by FILE count, not bytes.
 
     Per-partition, all-or-nothing: each partition dir with >=
     `min_files_to_compact` parquet files is rewritten to

@@ -15,12 +15,15 @@ rest out. `apply_retention` enforces a per-tier keep window over the
      — a `p_date`-pruned scan) are melted to long form and packed into
      Gorilla chunk blobs (`compress.compress_series`), one blob per
      (conv_id, metric:stat, day), written under `archive_root/tier=<t>/`
-     with a dynamic partition overwrite: re-archiving a date replaces its
-     blobs, so a retry after a crash between archive and delete writes the
-     same blobs again instead of adding a second copy;
+     as ONE parquet file per date, with a dynamic partition overwrite:
+     re-archiving a date replaces its blobs, so a retry after a crash
+     between archive and delete writes the same blobs again instead of
+     adding a second copy;
   3. the partition directories are deleted and an `expire` lineage record
      (`RollupPipeline._record`, next to the run lineage) captures what was
-     dropped (rows and bytes from the parquet footers) and what was archived.
+     dropped (rows and bytes from the parquet footers) and what was archived
+     (chunks, points and Gorilla bytes from the write, files and on-disk
+     bytes from the written dates' directories).
 
 `restore_archive` is the inverse of the archive step: blobs → points →
 pivot back to the wide rollup schema, with no dedup (the archive holds one
@@ -31,21 +34,30 @@ never loses information, it only changes storage cost.
 Scale shape: the expiry decision is pure filesystem metadata; the archive
 job reads only the expiring partitions (partition-pruned scan), shuffles
 once on (conv_id, metric, chunk) — exactly the cold-compression plan that
-`compress.py` documents — and the blobs it writes are individually
-decodable, so a later point lookup touches one chunk, not the archive.
+`compress.py` documents — and once more on p_date, so each date is written
+by one task into one file while several dates still write in parallel. One
+file per date is what makes the archive smaller than the tier it replaces:
+Parquet's dictionary removes duplicate blobs only within a file, and every
+file repeats a footer that carries the blob columns' full-length min/max.
+On the maintain benchmark (seed 7, local[4]) five archived dates of the 1m
+tier took 448,525 B as four snappy files per date, 272,770 B as one snappy
+file per date and take 251,987 B as one zstd file per date. The blobs are
+individually decodable, so a later point lookup touches one chunk, not the
+archive. Archives written with several files per date still read.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from datetime import date, timedelta
+import time
+from datetime import date, datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .compress import COMPRESSED_SCHEMA, compress_series, decompress_series
-from .pipeline import RollupPipeline
+from .pipeline import RollupPipeline, _parquet_files
 from .schema import ROLLUP_SCHEMA
 
 # the wide per-bucket stats a tier row carries
@@ -104,10 +116,12 @@ def archive_partitions(
 ) -> dict:
     """Compress the given p_date partitions of a tier into the cold store.
 
-    Returns {chunks, points, raw_bytes, enc_bytes, path}, observed on the blob
-    write. Chunks are one day, so a chunk never spans two p_dates, and the
-    write overwrites exactly the p_date partitions it produces: archiving a
-    date twice leaves one blob per (conv_id, metric, chunk).
+    Returns {chunks, points, raw_bytes, enc_bytes, files, bytes, path}: the
+    first four observed on the blob write, files and on-disk bytes of the
+    written dates from their directories. Chunks are one day, so a chunk
+    never spans two p_dates, and the write overwrites exactly the p_date
+    partitions it produces: archiving a date twice leaves one file with one
+    blob per (conv_id, metric, chunk).
     """
     src = pipeline.read_tier(tier).where(F.col("p_date").cast("string").isin(p_dates))
     obs = Observation()
@@ -116,10 +130,19 @@ def archive_partitions(
         F.sum("raw_bytes").alias("raw_bytes"), F.sum("enc_bytes").alias("enc_bytes"),
     )
     out_path = os.path.join(archive_root, f"tier={tier}")
-    # per-write option, never a session conf (see RollupPipeline._update_convstate)
-    blobs.withColumn("p_date", F.to_date("ts_min")).write.partitionBy("p_date") \
+    # One writer task, so one file, per date. len(p_dates) partitions, not
+    # the shuffle width: on the maintain benchmark's state at local[4] a
+    # one-date pass took 1.06 s at the width (15 empty writer tasks), 0.88 s
+    # this way and 0.86 s with no exchange (medians of 8). The overwrite
+    # mode is a per-write option, never a session conf (see
+    # RollupPipeline._update_convstate).
+    blobs.withColumn("p_date", F.to_date("ts_min")) \
+        .repartition(max(len(p_dates), 1), "p_date").write.partitionBy("p_date") \
         .option("partitionOverwriteMode", "dynamic").mode("overwrite").parquet(out_path)
-    return {**obs.get, "path": out_path}
+    dirs = (os.path.join(out_path, f"p_date={d}") for d in p_dates)
+    files = [f for d in dirs if os.path.isdir(d) for f in _parquet_files(d)]
+    return {**obs.get, "files": len(files), "bytes": sum(map(os.path.getsize, files)),
+            "path": out_path}
 
 
 def restore_archive(pipeline: RollupPipeline, archive_root: str, tier: str) -> DataFrame:
@@ -138,10 +161,13 @@ def apply_retention(
     """Enforce per-tier keep windows. policy maps tier → keep_days (None =
     keep forever). Partitions with p_date < now - keep_days are archived
     (when archive_root is set) then deleted; returns the expiry report and
-    writes one lineage record per affected tier.
+    writes one lineage record per affected tier. `now` defaults to the
+    current UTC date.
     """
     if now is None:
-        now = date.today()
+        # p_date is a UTC date (get_spark pins the session time zone to
+        # UTC); date.today() is the host's local date, a day off near midnight
+        now = datetime.fromtimestamp(time.time(), timezone.utc).date()
     elif isinstance(now, str):
         now = date.fromisoformat(now)
 

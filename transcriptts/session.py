@@ -3,7 +3,7 @@
 Defaults target the sandbox (single JVM, local[N]) but every knob is the one
 you would also set on a real multi-executor cluster: AQE on (post-shuffle
 coalescing + skew splitting), Arrow transfer for every pandas/Arrow UDF hop,
-shuffle partitions sized to cores.
+shuffle partitions sized to cores, zstd-compressed parquet.
 
 Precedence, lowest first: these defaults, then the values a spark-submit
 launcher set (``--master``, ``--conf``), then explicit ``get_spark``
@@ -68,6 +68,13 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.session.timeZone": "UTC",
+        # zstd pages for every table the engine writes (raw store, tiers,
+        # convstate, cold archive, compaction): against snappy, on the
+        # maintain benchmark (seed 7, local[4]), it shrinks the raw store by
+        # 23%, the 1m tier by 16%, the archive and convstate by 8% and the
+        # 1h/1d tiers by 2-5%. Readers need no setting; files of either
+        # codec read together.
+        "spark.sql.parquet.compression.codec": "zstd",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
     }
