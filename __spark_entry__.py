@@ -1032,13 +1032,19 @@ FROM documents GROUP BY 1
 
 
 def _q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document content fingerprint (datapipe.with_fingerprint): md5 mode
-    so the DuckDB oracle reproduces the digest character-for-character;
-    production default is xxhash64 (JVM-side 64-bit)."""
+    """Per-document content fingerprint (datapipe.with_fingerprint): the md5
+    hex digest, which the DuckDB oracle reproduces character for character.
+
+    md5 is datapipe's only hash family. The JVM's 64-bit xxHash family it
+    replaced was the default and faster: at sf0.1 on local[4] (4 cores),
+    minhash_dedup (32 hashes, 8 bands, k=3, threshold 0.3) took a median
+    7.4-7.6 s with it against 8.2-10.1 s with md5 over two runs, a cost
+    callers of the old default now pay. But no oracle ever checked it, and
+    it found a different candidate set (94 pairs against md5's 256)."""
     from transcriptts.datapipe import with_fingerprint
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_fingerprint(docs, hash_mode="md5").select("doc_id", "fingerprint")
+    return with_fingerprint(docs).select("doc_id", "fingerprint")
 
 
 _SQL_DOC_FINGERPRINT = """
@@ -1090,7 +1096,7 @@ def _q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = minhash_dedup(
         spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        num_hashes=32, bands=8, k=3, threshold=0.3, hash_mode="md5",
+        num_hashes=32, bands=8, k=3, threshold=0.3,
     )
     return _round6(out, "jaccard")
 
@@ -1128,12 +1134,18 @@ WHERE len(list_intersect(da.shl, db.shl)) * 1.0 /
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dedup groups: MinHash+LSH pairs (same params as
-    minhash_lsh_dedup) -> distributed min-label connected components ->
-    per-document canonical component id + keep flag."""
+    minhash_lsh_dedup) -> distributed connected components -> per-document
+    canonical component id + keep flag.
+
+    connected_components runs min-label propagation and falls back to star
+    contraction only when min-label has not converged in max_iter rounds.
+    This near-clique graph takes the min-label path: at sf0.1 on local[4]
+    (4 cores, pairs precomputed) min-label took a median 1.76 s and star
+    4.17 s."""
     from transcriptts.datapipe import dedup_components, minhash_dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = minhash_dedup(docs, num_hashes=32, bands=8, k=3, threshold=0.3, hash_mode="md5")
+    pairs = minhash_dedup(docs, num_hashes=32, bands=8, k=3, threshold=0.3)
     return dedup_components(docs, pairs)
 
 
@@ -1189,13 +1201,11 @@ SELECT qid, cid, {_r6('cos', 'cos')}, cast(rank AS int) AS rank FROM ranked WHER
 
 
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """md5 hash mode (engine-portable bits, reproduced digit-for-digit by
-    the oracle) with 9 bands — the pigeonhole guarantee for Hamming <= 8."""
+    """md5 token bits (engine-portable, reproduced digit-for-digit by the
+    oracle) with 9 bands — the pigeonhole guarantee for Hamming <= 8."""
     from transcriptts.datapipe import simhash_pairs
 
-    out = simhash_pairs(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), max_hamming=8, hash_mode="md5"
-    )
+    out = simhash_pairs(spark.read.parquet(f"{sf_dir}/documents.parquet"), max_hamming=8)
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
@@ -1284,8 +1294,9 @@ SELECT qid, cid, {_r6('cos', 'cos')}, cast(rank AS int) AS rank FROM ranked WHER
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat ANN: deterministic md5-sampled codebook (rebuilt identically
     by the oracle's ORDER BY md5(...) LIMIT k), nearest-cell assignment on
-    6-dp-rounded squared L2, nprobe-cell candidate join, exact cosine
-    re-rank. Queries = every 5th vector, like cosine_topk."""
+    6-dp-rounded squared L2 (one Arrow-batched matmul UDF), nprobe-cell
+    candidate join, exact cosine re-rank. Queries = every 5th vector, like
+    cosine_topk."""
     from transcriptts.datapipe import ann_ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1333,19 +1344,6 @@ ranked AS (
 )
 SELECT qid, cid, {_r6('cos', 'cos')}, cast(rank AS int) AS rank FROM ranked WHERE rank <= 5
 """
-
-
-def _q_ann_ivf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The large-codebook assignment path (Arrow-batched matmul UDF) against
-    the SAME oracle as the literal path: identical 6-dp distance rounding and
-    centroid-id tie-break make the two assignments agree, so this row
-    driver-verifies the Arrow path end-to-end."""
-    from transcriptts.datapipe import ann_ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.where(F.col("vec_id") % 5 == 0)
-    out = ann_ivf_topk(emb, queries=qs, k_cells=16, nprobe=4, topk=5, assign_method="pandas")
-    return _round6(out.select("qid", "cid", "cos", "rank"), "cos")
 
 
 def _q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1773,7 +1771,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cosine_topk": _q_cosine_topk,
         "simhash_pairs": _q_simhash_pairs,
         "ann_ivf_topk": _q_ann_ivf,
-        "ann_ivf_topk_arrow": _q_ann_ivf_pandas,
         "text_stats": _q_text_stats,
         "quality_score": _q_quality,
         "lang_id": _q_lang_id,
@@ -1808,12 +1805,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gorilla_roundtrip_agg": _q_gorilla_roundtrip,
         "turns_text_fingerprint": _q_turns_text_fingerprint,
         # (d continued) distinct PELT cost functions, r04-green, unchanged;
-        # pelt_l1 is the 50th entry, the last inside the window
+        # pelt_poisson is the 50th entry, the last inside the window
         "pelt_l2": _q_pelt,
         "pelt_l1": _q_pelt_cost("l1", 5.0),
-        # (e) tail, past the 50-query window: r04-green variants over
-        # unchanged files (cap-skippable)
         "pelt_poisson": _q_pelt_poisson,
+        # (e) tail from the 51st entry, past the 50-query window: r04-green
+        # variants over unchanged files (cap-skippable)
         "pelt_bernoulli": _q_pelt_bernoulli,
         "pelt_binomial": _q_pelt_binomial,
         "pelt_rbf": _q_pelt_cost("rbf", 2.0),
@@ -1891,7 +1888,6 @@ def oracle_sql() -> dict[str, str]:
         "simhash_pairs": _sql_simhash(max_hamming=8),
         "ann_lsh_topk": _sql_ann_lsh(n_planes=8, seed=42, topk=5),
         "ann_ivf_topk": _SQL_ANN_IVF,
-        "ann_ivf_topk_arrow": _SQL_ANN_IVF,
         "embedding_dedup": _sql_embedding_dedup(n_planes=6, seed=7, threshold=0.35),
         "media_audio_features": _sql_media_audio_features(n=120, seed=42),
         "media_image_features": _sql_media_image_features(n=120, seed=42),

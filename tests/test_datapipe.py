@@ -70,12 +70,6 @@ def test_minhash_dedup_agrees_with_exact_jaccard(docs):
     assert mh == exact
 
 
-def test_minhash_md5_mode_matches_xxhash_mode(docs):
-    a = {(r["id_a"], r["id_b"]) for r in D.minhash_dedup(docs, 64, 16, 3, 0.4, hash_mode="md5").collect()}
-    b = {(r["id_a"], r["id_b"]) for r in D.minhash_dedup(docs, 64, 16, 3, 0.4, hash_mode="xxhash64").collect()}
-    assert a == b  # verification step makes the hash family irrelevant here
-
-
 def test_simhash_near_dup_low_hamming(docs):
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in D.simhash_pairs(docs, max_hamming=16).collect()}
     assert (0, 6) in pairs and pairs[(0, 6)] == 0  # same tokens → same simhash
@@ -227,7 +221,8 @@ def test_ann_recall_floor(spark):
 def test_ann_ivf_recall_and_determinism(spark):
     """IVF-Flat: planted near-dups (cos ~0.98) land in the same cell at high
     rate, so nprobe=4/16 recall clears 0.9; the md5-sampled codebook is
-    deterministic across calls; assignments cover every vector exactly once."""
+    deterministic across calls; assignments cover every vector exactly once;
+    cell assignment is one Arrow-batched UDF."""
     from collections import defaultdict
 
     rng = np.random.default_rng(3)
@@ -253,16 +248,12 @@ def test_ann_ivf_recall_and_determinism(spark):
     pairs = df.select("qid", "cid").collect()
     assert len(pairs) == len({(r["qid"], r["cid"]) for r in pairs})
 
-    # the Arrow-batched large-codebook assignment path (matmul + stable
-    # argsort) produces the identical result set as the literal path: same
-    # 6-dp rounding, same centroid-id tie-break
-    df_p = D.ann_ivf_topk(emb, k_cells=16, nprobe=4, topk=5, codebook=cb1, assign_method="pandas")
-    lit_rows = {(r["qid"], r["cid"], round(r["cos"], 6)) for r in df.collect()}
-    pd_rows = {(r["qid"], r["cid"], round(r["cos"], 6)) for r in df_p.collect()}
-    assert lit_rows == pd_rows
-    # and the pandas path is Arrow-batched, never row-at-a-time Python
-    plan = df_p._jdf.queryExecution().executedPlan().toString()
+    # cell assignment is Arrow-batched, never row-at-a-time Python
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
+    # a corpus vector's cell is its nearest probe, so there must be one
+    with pytest.raises(ValueError, match="nprobe"):
+        D.ann_ivf_topk(emb, nprobe=0, codebook=cb1)
 
 
 def test_jaccard_plan_has_no_cache_and_expression_sizes(docs):
@@ -415,7 +406,7 @@ def test_connected_components_long_path_converges(spark):
 def test_dedup_components_keep_set(spark, docs):
     """End-to-end: minhash pairs -> transitive groups -> one canonical doc
     per group; docs without any near-dup keep themselves."""
-    pairs = D.minhash_dedup(docs, num_hashes=32, bands=8, k=3, threshold=0.3, hash_mode="md5")
+    pairs = D.minhash_dedup(docs, num_hashes=32, bands=8, k=3, threshold=0.3)
     out = D.dedup_components(docs, pairs)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert len(rows) == 9
@@ -430,8 +421,10 @@ def test_dedup_components_keep_set(spark, docs):
 
 
 def test_connected_components_random_graphs_vs_union_find(spark):
-    """Seeded random edge lists (sparse + denser) — BOTH methods (min-label
-    propagation and star contraction) must agree with union-find exactly."""
+    """Seeded random edge lists (sparse + denser): the public call (min-label
+    propagation, which converges on these) and star contraction, called
+    directly since the public call only reaches it on long diameters, must
+    both agree with union-find exactly."""
     import random
 
     for seed, n_nodes, n_edges in ((101, 60, 40), (202, 40, 80)):
@@ -442,13 +435,14 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         ids = sorted({x for p in pairs for x in p})
         want = _uf_components(ids, pairs)
-        for method in ("minlabel", "star"):
-            got = {
-                r["v"]: r["component_id"]
-                for r in D.connected_components(df, method=method).collect()
-            }
+        edges = df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        for name, comp in (
+            ("public", D.connected_components(df)),
+            ("star", D._star_components(edges, 25)),
+        ):
+            got = {r["v"]: r["component_id"] for r in comp.collect()}
             assert got == want, (
-                seed, method, {k: (got[k], want[k]) for k in got if got[k] != want[k]},
+                seed, name, {k: (got[k], want[k]) for k in got if got[k] != want[k]},
             )
 
 
@@ -522,7 +516,7 @@ def test_lsh_capped_bucket_stays_connected(spark):
     )
     sigs = D.minhash_signatures(docs, num_hashes=16, k=3)
     pairs = D.lsh_candidate_pairs(sigs, bands=2, sig_len=16, max_bucket_size=3)
-    comp = D.connected_components(pairs, method="star")
+    comp = D.connected_components(pairs)
     groups = {r["component_id"] for r in comp.collect()}
     assert len(groups) == 1  # all 50 ids in one component despite the cap
 
@@ -568,15 +562,15 @@ def test_ann_lsh_plan_vectors_travel_once(spark):
 
 def test_star_components_adversarial_path(spark):
     """A 4096-node path graph: min-label needs diameter (4095) rounds and
-    raises at max_iter, while star contraction converges in O(log^2 n)
-    iterations — the documented graceful path for adversarial diameters."""
+    stops unconverged at max_iter, so the default call falls back to star
+    contraction, which converges in O(log^2 n) iterations on any diameter.
+    A node whose only pair is a self-loop stays its own component there."""
     n = 4096
-    pairs = [(i, i + 1) for i in range(n - 1)]
+    pairs = [(i, i + 1) for i in range(n - 1)] + [(n + 10, n + 10)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long").coalesce(8)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(df, max_iter=5)
-    got = D.connected_components(df, max_iter=16, method="star")
+    got = D.connected_components(df)
     rows = {r["v"]: r["component_id"] for r in got.collect()}
+    assert rows.pop(n + 10) == n + 10
     assert len(rows) == n and set(rows.values()) == {0}
 
 

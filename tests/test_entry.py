@@ -154,7 +154,7 @@ def test_minhash_band_cap_oracle_parity(spark):
     cap = 2
     out = minhash_dedup(
         spark.createDataFrame(pdf), num_hashes=32, bands=8, k=3,
-        threshold=0.3, hash_mode="md5", max_bucket_size=cap,
+        threshold=0.3, max_bucket_size=cap,
     ).toPandas()
 
     old = entrymod.LSH_BUCKET_CAP

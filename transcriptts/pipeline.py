@@ -335,9 +335,7 @@ class RollupPipeline:
             raise ValueError(f"unknown tier {tier!r}")
         return self.spark.read.schema(_TIER_SCHEMA).parquet(self._tier_path(tier))
 
-    def compact_tier(
-        self, tier: str, max_files_per_partition: int = 1, min_files_to_compact: int = 2
-    ) -> dict:
+    def compact_tier(self, tier: str) -> dict:
         """compact_partitions over one tier's layout, with a lineage record.
 
         The tier pipeline's own writes are already 1 file per p_date
@@ -346,12 +344,7 @@ class RollupPipeline:
         the append-mode raw-turns store is where compaction routinely
         fires; use compact_partitions directly there.
         """
-        report = compact_partitions(
-            self.spark,
-            self._tier_path(tier),
-            max_files_per_partition=max_files_per_partition,
-            min_files_to_compact=min_files_to_compact,
-        )
+        report = compact_partitions(self.spark, self._tier_path(tier))
         report["tier"] = tier
         if report["compacted"]:
             report["snapshot_id"] = self._record(
@@ -375,28 +368,21 @@ class RollupPipeline:
         ).agg(F.sum(F.conv(F.substring("h", 1, 15), 16, 10).cast("decimal(38,0)")).alias("s"))
         return str(row.collect()[0]["s"])
 
-def compact_partitions(
-    spark: SparkSession,
-    root: str,
-    max_files_per_partition: int = 1,
-    min_files_to_compact: int = 2,
-    partition_prefix: str = "p_date=",
-) -> dict:
+def compact_partitions(spark: SparkSession, root: str) -> dict:
     """Merge small files inside each hive partition of a parquet layout —
     the small-file problem: append-mode writers (incremental raw-turn
     ingests) and archives written before it was one file per date leave
     many task files, and at 100 TB a scan's task count and listing cost
     are driven by FILE count, not bytes.
 
-    Per-partition, all-or-nothing: each partition dir with >=
-    `min_files_to_compact` parquet files is rewritten to
-    `max_files_per_partition` files via coalesce into a hidden `.compact-*`
-    temp dir, verified by row count (the footer row sums of the source and
-    the temp dir's files; no data is read back), then swapped with two renames
-    (`part -> part.old`, `tmp -> part`). The swap is NOT a single atomic
-    operation: a crash can land in three states, all of which the NEXT run
-    heals before scanning — (1) only `.compact-*` temp left: removed
-    (unswapped output is unverified); (2) `part.old` present and the live
+    Per-partition, all-or-nothing: each `p_date=` partition dir with two or
+    more parquet files is rewritten to one file via coalesce into a hidden
+    `.compact-*` temp dir, verified by row count (the footer row sums of the
+    source and the temp dir's files; no data is read back), then swapped
+    with two renames (`part -> part.old`, `tmp -> part`). The swap is NOT a
+    single atomic operation: a crash can land in three states, all of which
+    the NEXT run heals before scanning — (1) only `.compact-*` temp left:
+    removed (unswapped output is unverified); (2) `part.old` present and the live
     dir missing (crash between the renames): `.old` renamed back, no data
     loss; (3) both present (crash before the final cleanup): the live dir
     is already the verified compacted output, `.old` removed. Rows are
@@ -423,7 +409,7 @@ def compact_partitions(
             continue
         if name.startswith(".compact-"):
             shutil.rmtree(full)
-        elif name.startswith(partition_prefix) and name.endswith(".old"):
+        elif name.startswith("p_date=") and name.endswith(".old"):
             live = full[: -len(".old")]
             if os.path.isdir(live):
                 shutil.rmtree(full)
@@ -433,18 +419,18 @@ def compact_partitions(
     report: dict = {"compacted": [], "files_before": 0, "files_after": 0}
     for name in sorted(os.listdir(root)):
         part_dir = os.path.join(root, name)
-        if not (name.startswith(partition_prefix) and os.path.isdir(part_dir)):
+        if not (name.startswith("p_date=") and os.path.isdir(part_dir)):
             continue
         if name.endswith(".old"):  # unreachable post-recovery; defensive
             continue  # pragma: no cover
         files = _parquet_files(part_dir)
         report["files_before"] += len(files)
-        if len(files) < max(min_files_to_compact, max_files_per_partition + 1):
+        if len(files) < 2:
             report["files_after"] += len(files)
             continue
         n_before = _footer_rows(files)
         tmp_dir = os.path.join(root, f".compact-{name}-{uuid.uuid4().hex[:8]}")
-        spark.read.parquet(part_dir).coalesce(max_files_per_partition) \
+        spark.read.parquet(part_dir).coalesce(1) \
             .write.mode("overwrite").parquet(tmp_dir)
         n_after = _footer_rows(_parquet_files(tmp_dir))
         if n_after != n_before:  # pragma: no cover - defensive

@@ -32,11 +32,8 @@ from .rollup import token_count_col
 from .schema import TRANSCRIPTS_SCHEMA
 
 
-def read_transcript_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    r = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(path)
+def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
+    return spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(path)
 
 
 def streaming_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
