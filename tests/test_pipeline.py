@@ -426,24 +426,41 @@ def _three_days():
     return [[r for r in rows if r[5] < end] for end in (d2, d3, dt.datetime(2025, 7, 4))]
 
 
-def test_mixed_watermarks_equal_full_recompute(spark, tmp_path):
-    """1d is committed a day behind 1m/1h; the next incremental run cuts
-    one shared batch at 1d's watermark date and filters it per tier, and
-    every tier still equals a full recompute."""
+def test_mixed_watermarks_equal_full_recompute(spark, tmp_path, count_jobs):
+    """Two histories before one incremental 3-tier run: 1d committed a day
+    behind 1m/1h (the run cuts one frame at 1d's watermark date), and only
+    1m committed (1h and 1d are new beside it, so the run derives one full
+    frame). Each incremental tier filters the frame at its own watermark,
+    every tier equals a full recompute, and with a fingerprint the run
+    issues at most MIXED_RUN_JOB_BUDGET jobs."""
     upto1, upto2, upto3 = _three_days()
-    p = RollupPipeline(spark, str(tmp_path / "tiers"))
-    p.run(_mk_turns(spark, upto1))
-    p.run(_mk_turns(spark, upto2), tiers=("1m", "1h"), incremental=True)
-    marks = {t: e["watermark"][:10] for t, e in p.load_state()["tiers"].items()}
-    assert marks == {"1m": "2025-07-02", "1h": "2025-07-02", "1d": "2025-07-01"}
-
-    rep = p.run(_mk_turns(spark, upto3), incremental=True)
-    assert all(rep["metrics"][t]["incremental_from"] for t in ("1m", "1h", "1d"))
-    _assert_lineage_matches_read_back(p, rep)
     full = RollupPipeline(spark, str(tmp_path / "full"))
     full.run(_mk_turns(spark, upto3))
-    for t in ("1m", "1h", "1d"):
-        assert p.content_hash(t) == full.content_hash(t), t
+
+    def one_day_behind(p):
+        p.run(_mk_turns(spark, upto1))
+        p.run(_mk_turns(spark, upto2), tiers=("1m", "1h"), incremental=True)
+        return {"1m": "2025-07-02", "1h": "2025-07-02", "1d": "2025-07-01"}
+
+    def only_1m(p):
+        p.run(_mk_turns(spark, upto2), tiers=("1m",))
+        return {"1m": "2025-07-02"}
+
+    for history in (one_day_behind, only_1m):
+        p = RollupPipeline(spark, str(tmp_path / history.__name__))
+        expected = history(p)
+        marks = {t: e["watermark"][:10] for t, e in p.load_state()["tiers"].items()}
+        assert marks == expected, history.__name__
+
+        df = _mk_turns(spark, upto3)
+        jobs, rep = count_jobs(f"mixed-{history.__name__}", lambda: p.run(
+            df, incremental=True, input_fingerprint="upto3"))
+        assert jobs <= MIXED_RUN_JOB_BUDGET, (history.__name__, jobs)
+        assert {t for t in ("1m", "1h", "1d")
+                if rep["metrics"][t]["incremental_from"]} == set(expected), history.__name__
+        _assert_lineage_matches_read_back(p, rep)
+        for t in ("1m", "1h", "1d"):
+            assert p.content_hash(t) == full.content_hash(t), (history.__name__, t)
 
 
 def test_ntz_input_reads_back_with_rollup_schema(spark, tmp_path):
@@ -479,6 +496,11 @@ def test_ntz_input_reads_back_with_rollup_schema(spark, tmp_path):
 # Tiers and convstate are read with declared schemas (no schema-inference
 # job). Reading a written tier back or rescanning raw per tier pushes it over.
 PIPELINE_JOB_BUDGET = 12
+
+# A run given its fingerprint skips the scan: 2 for the one derived frame,
+# 2 per tier and 2 for convstate, whether the frame is cut or full (a new
+# tier beside incremental ones).
+MIXED_RUN_JOB_BUDGET = 10
 
 
 def test_incremental_run_job_budget(spark, tmp_path, count_jobs):

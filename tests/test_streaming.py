@@ -197,16 +197,55 @@ def test_streaming_cusum_gap_overflow_fast_forwards(spark, tmp_path):
     assert all(r["kind"] in ("gap_skipped", "alarm") for r in rows)
 
 
-def test_foreach_batch_bridge_runs_full_batch_rollup(spark, tmp_path):
+def test_foreach_batch_bridge_equals_full_recompute_and_replays(spark, tmp_path):
+    """Two micro-batches (ids 0 and 1) on one checkpoint: conversation a
+    crosses midnight in batch 0 and its 00:00 bucket is split across the
+    batches; b's turns before midnight are in batch 0, those after in batch 1
+    (the seam latency needs a seed row). All three tiers equal a full
+    RollupPipeline run over the same turns, and replaying batch 1 changes
+    neither raw/ nor the tiers."""
+    import os
+
+    from transcriptts.pipeline import RollupPipeline
+
     inp, outp, ck = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    rows = [("c", i, "user", "w " * (i + 1), None, BASE + dt.timedelta(seconds=10 * i)) for i in range(12)]
-    _write_batch(spark, inp, rows)
+    day2 = BASE + dt.timedelta(days=1)
+    t = lambda base, sec: base + dt.timedelta(seconds=sec)
+    a = [t(day2, s) for s in (-120, -80, -30, 5, 35, 70, 180)]
+    b = [t(day2, s) for s in (-7200, -7180, 3600, 3630)]
+    c = [t(day2, s) for s in (7200, 7260)]
+    rows = [
+        (conv, i, "user", " ".join(["w"] * (1 + i % 3)), None, ts)
+        for conv, stamps in (("a", a), ("b", b), ("c", c))
+        for i, ts in enumerate(stamps)
+    ]
+    first = [r for r in rows if (r[0] == "a" and r[1] < 4) or (r[0] == "b" and r[1] < 2)]
+    second = [r for r in rows if r not in first]
+
+    _write_batch(spark, inp, first)
     stream_rollup_foreach_batch(spark, inp, outp, ck)
-    got = spark.read.parquet(f"{outp}/tier=1m_stream")
-    toks = {r["bucket_start"]: r for r in got.where("metric='token_count'").collect()}
-    assert sum(r["cnt"] for r in toks.values()) == 12
-    lats = got.where("metric='latency_s'").collect()
-    assert len(lats) > 0 and all(r["p50"] is not None for r in lats)  # exact percentiles present
+    _write_batch(spark, inp, second)
+    stream_rollup_foreach_batch(spark, inp, outp, ck)
+    assert sorted(os.listdir(f"{outp}/raw")) == ["batch_id=0", "batch_id=1"]
+
+    full = RollupPipeline(spark, str(tmp_path / "full"))
+    full.run(spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, "
+                                         "text string, tool string, ts timestamp"))
+    p = RollupPipeline(spark, f"{outp}/tiers")
+    hashes = {tier: p.content_hash(tier) for tier in ("1m", "1h", "1d")}
+    assert hashes == {tier: full.content_hash(tier) for tier in ("1m", "1h", "1d")}
+    assert {e["fingerprint"] for e in p.load_state()["tiers"].values()} == {"stream-1"}
+
+    # replay batch 1: drop its commit (and the checksum beside it) and restart
+    n_raw = spark.read.parquet(f"{outp}/raw").count()
+    n_lineage = len(os.listdir(f"{outp}/tiers/lineage"))
+    os.remove(f"{ck}/commits/1")
+    os.remove(f"{ck}/commits/.1.crc")
+    stream_rollup_foreach_batch(spark, inp, outp, ck)
+    assert os.path.exists(f"{ck}/commits/1")
+    assert spark.read.parquet(f"{outp}/raw").count() == n_raw == len(rows)
+    assert len(os.listdir(f"{outp}/tiers/lineage")) == n_lineage
+    assert {tier: p.content_hash(tier) for tier in ("1m", "1h", "1d")} == hashes
 
 
 def test_streaming_sessions_gap_split_and_boundary(spark, tmp_path):

@@ -41,9 +41,9 @@ Resume semantics:
 - state.json is swapped via os.replace AFTER the tier's data and lineage
   land, so a crash at any point leaves a consistent (re-runnable) view.
 
-A run derives each input kind once (a batch cut at the earliest watermark,
-a full frame) and reads no tier back: watermarks come from an Observation
-on the write, per-partition rows and bytes from parquet footers.
+A run derives one frame (cut at the earliest watermark, or full when a tier
+has none) and reads no tier back: watermarks come from an Observation on
+the write, per-partition rows and bytes from parquet footers.
 
 Every write sorts within partitions by (conv_id, metric, bucket_start) so a
 rerun of the same input produces identical logical content (verified by the
@@ -165,8 +165,7 @@ class RollupPipeline:
 
     def _update_convstate(self, turns: DataFrame, incremental_dates: bool) -> None:
         """Upsert (conv_id, p_date) -> last turn of that date. `turns` is the
-        run's derived batch (cutoff-filtered when every tier is incremental),
-        so an incremental run only rewrites the date partitions it touches.
+        run's derived frame; a cut frame rewrites only the dates it touches.
 
         The last turn is the single row maximal by (turn_idx, ts) — turn_idx
         FIRST, matching the latency lag() window's ORDER BY turn_idx — so the
@@ -258,24 +257,17 @@ class RollupPipeline:
         if not todo:
             return report
 
-        # one derived frame per kind, keyed by "incremental"; convstate reads the
-        # full one if any, else the batch (exactly the raw rows from the cutoff on)
-        marks = [w for w in todo.values() if w is not None]
-        n_full = len(todo) - len(marks)
-        frames = {}
-        if marks:
-            earliest = min(marks, key=datetime.fromisoformat)
-            frames[True] = self.incremental_metrics(transcripts, earliest)
-        if n_full:
-            frames[False] = with_derived_metrics(transcripts).select(*self._DERIVED)
-        readers = {True: len(marks) + (not n_full), False: n_full + 1}
-        frames = {k: f.persist(StorageLevel.MEMORY_AND_DISK) if readers[k] > 1 else f
-                  for k, f in frames.items()}
+        # one derived frame per run: full when any tier is new, else cut at the
+        # earliest watermark; persisted, as every tier and convstate read it
+        cut = None if None in todo.values() else min(todo.values(), key=datetime.fromisoformat)
+        frame = (with_derived_metrics(transcripts).select(*self._DERIVED) if cut is None
+                 else self.incremental_metrics(transcripts, cut)
+                 ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             for tier, prev_watermark in todo.items():
                 t0 = time.time()
-                d = (frames[False] if prev_watermark is None
-                     else frames[True].where(F.col("ts") >= _cutoff(prev_watermark)))
+                d = (frame if prev_watermark is None
+                     else frame.where(F.col("ts") >= _cutoff(prev_watermark)))
                 obs = Observation()
                 out = (
                     rollup(d, tier)
@@ -324,10 +316,9 @@ class RollupPipeline:
 
             # maintain the per-(conv, date) seed state for the NEXT incremental
             # run; an all-incremental run only rewrites post-cutoff dates.
-            self._update_convstate(frames[not n_full], incremental_dates=not n_full)
+            self._update_convstate(frame, incremental_dates=cut is not None)
         finally:
-            for df in frames.values():
-                df.unpersist()
+            frame.unpersist()
         return report
 
     def read_tier(self, tier: str) -> DataFrame:

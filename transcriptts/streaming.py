@@ -13,9 +13,9 @@ Notes:
   exact percentiles stay a batch/cold-tier concern (rollup.py), which is
   also how production TSDBs split this;
 - latency (ts - previous turn ts) needs per-conversation ordering, which a
-  streaming window agg cannot see → derived only within the micro-batch via
-  foreachBatch in `stream_rollup_foreach_batch`, or skipped in the
-  pure-aggregation path (token_count only);
+  streaming window agg cannot see → skipped in the pure-aggregation path;
+  `stream_rollup_foreach_batch` runs the incremental `RollupPipeline`, whose
+  seed rows keep it exact across micro-batches;
 - sequential detector kernels stream via ``applyInPandasWithState``
   (`streaming_cusum`): per-conversation state across micro-batches, exact
   batch-kernel parity on the concatenated stream;
@@ -28,8 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import RollupPipeline
 from .rollup import token_count_col
 from .schema import TRANSCRIPTS_SCHEMA
+from .store import read_raw_turns, write_raw_turns
 
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -98,14 +100,12 @@ def streaming_sessions(
     )
 
 
-def run_stream_to_memory(
-    stream_agg: DataFrame, query_name: str, checkpoint_dir: str, mode: str = "append"
-):
+def run_stream_to_memory(stream_agg: DataFrame, query_name: str, checkpoint_dir: str):
     """Drain all available input into an in-memory table (tests / demos)."""
     q = (
         stream_agg.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(mode)
+        .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -262,19 +262,24 @@ def stream_rollup_foreach_batch(
     output_root: str,
     checkpoint_dir: str,
 ):
-    """Micro-batch bridge into the batch engine: each micro-batch runs the
-    FULL batch rollup (both metrics, exact percentiles) via foreachBatch and
-    appends per-batch partitions. Gives streaming ingest + batch semantics;
-    per-conv latency is exact within a micro-batch (file-grain ingest keeps
-    conversations together in practice; the snapshot pipeline remains the
-    corrector of record)."""
-    from .rollup import rollup, with_derived_metrics
+    """Micro-batch bridge into the batch engine. Layout under output_root/:
+      raw/batch_id=<n>/p_date=<d>/  micro-batch n's turns (`write_raw_turns`)
+      tiers/                        the `RollupPipeline` layout, all 3 tiers
+
+    Micro-batch n overwrites raw/batch_id=<n>, then runs the incremental
+    pipeline over raw/ with the fingerprint "stream-<n>" (no fingerprint
+    scan). Seed rows keep latency exact across micro-batches and the dynamic
+    p_date overwrite recomputes split buckets whole, so the tiers equal a
+    full recompute. Replaying batch n rewrites only its own raw directory and
+    skips the tiers committed under "stream-<n>": a no-op. A turn older than
+    the date of a tier's watermark lands in raw/ and reaches the tiers on the
+    next full run, as in batch."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = rollup(with_derived_metrics(batch_df), "1m").withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        out.write.mode("append").parquet(f"{output_root}/tier=1m_stream")
+        write_raw_turns(batch_df, f"{output_root}/raw/batch_id={batch_id}")
+        RollupPipeline(spark, f"{output_root}/tiers").run(
+            read_raw_turns(spark, f"{output_root}/raw"), incremental=True,
+            input_fingerprint=f"stream-{batch_id}")
 
     stream = read_transcript_stream(spark, input_path)
     q = (
