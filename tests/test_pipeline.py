@@ -21,7 +21,7 @@ def transcripts(spark):
 def test_pipeline_full_run_and_resume(spark, transcripts, tmp_path):
     root = str(tmp_path / "tiers")
     p = RollupPipeline(spark, root)
-    report = p.run(transcripts)
+    report = p.run(transcripts, input_fingerprint="v1")
     assert set(report["snapshot_ids"]) == {"1m", "1h", "1d"}
     for t in ("1m", "1h", "1d"):
         assert p.read_tier(t).count() > 0
@@ -29,8 +29,8 @@ def test_pipeline_full_run_and_resume(spark, transcripts, tmp_path):
 
     hashes = {t: p.content_hash(t) for t in ("1m", "1h", "1d")}
 
-    # rerun same input → everything skipped, nothing rewritten
-    report2 = p.run(transcripts)
+    # rerun the same named input → everything skipped, nothing rewritten
+    report2 = p.run(transcripts, input_fingerprint="v1")
     assert sorted(report2["skipped"]) == ["1d", "1h", "1m"]
     assert report2["snapshot_ids"] == {}
 
@@ -40,10 +40,33 @@ def test_pipeline_full_run_and_resume(spark, transcripts, tmp_path):
     del st["tiers"]["1d"]
     p._commit_state(st)
 
-    report3 = p.run(transcripts)
+    report3 = p.run(transcripts, input_fingerprint="v1")
     assert sorted(report3["skipped"]) == ["1h", "1m"]  # only 1d recomputed
     assert set(report3["snapshot_ids"]) == {"1d"}
     assert {t: p.content_hash(t) for t in ("1m", "1h", "1d")} == hashes  # identical content
+
+
+def test_unnamed_rerun_recomputes_changed_input(spark, transcripts, tmp_path):
+    """Without a named input nothing is skipped: a corrected input with the
+    same row count and ts range (one turn's text grows) recomputes every
+    tier, and each equals a full recompute of the corrected input."""
+    from pyspark.sql import functions as F
+
+    p = RollupPipeline(spark, str(tmp_path / "tiers"))
+    p.run(transcripts)
+    turns = transcripts.orderBy("ts").select("conv_id", "turn_idx").collect()
+    mid = turns[len(turns) // 2]
+    hit = (F.col("conv_id") == mid["conv_id"]) & (F.col("turn_idx") == mid["turn_idx"])
+    fixed = transcripts.withColumn(
+        "text", F.when(hit, F.concat_ws(" ", "text", F.lit("three more words")))
+        .otherwise(F.col("text")))
+
+    rep = p.run(fixed)
+    assert rep["skipped"] == [] and set(rep["snapshot_ids"]) == {"1m", "1h", "1d"}
+    full = RollupPipeline(spark, str(tmp_path / "full"))
+    full.run(fixed)
+    for t in ("1m", "1h", "1d"):
+        assert p.content_hash(t) == full.content_hash(t), t
 
 
 def test_pipeline_lineage_records(spark, transcripts, tmp_path):
@@ -53,7 +76,8 @@ def test_pipeline_lineage_records(spark, transcripts, tmp_path):
     sid = report["snapshot_ids"]["1h"]
     with open(os.path.join(root, "lineage", f"{sid}.json")) as f:
         lin = json.load(f)
-    assert lin["tier"] == "1h" and lin["rows"] > 0 and lin["bytes"] > 0
+    assert (lin["version"], lin["snapshot_id"], lin["op"], lin["tier"]) == (2, sid, "rollup", "1h")
+    assert lin["rows"] > 0 and lin["bytes"] > 0
     assert len(lin["partitions"]) >= 1
     assert sum(pt["rows"] for pt in lin["partitions"]) == lin["rows"]
     st = p.load_state()
@@ -213,12 +237,10 @@ def test_compact_partitions_merges_append_mode_small_files(spark, tmp_path):
     """Append-mode writers (raw-turns store, cold archive) accumulate task
     files per p_date; compact_partitions rewrites oversized partitions to
     one file each (atomic swap), preserves every row and the text-fidelity
-    fingerprint, and skips already-compact partitions. compact_tier wraps it
-    with a lineage record (the tier layout itself writes 1 file/partition,
-    so it reports a no-op there)."""
+    fingerprint, and skips already-compact partitions."""
     import os
 
-    from transcriptts.pipeline import RollupPipeline, compact_partitions
+    from transcriptts.pipeline import compact_partitions
     from transcriptts.store import turns_fingerprint, write_raw_turns
     from transcriptts.synth import synth_transcripts_arrow
 
@@ -227,8 +249,8 @@ def test_compact_partitions_merges_append_mode_small_files(spark, tmp_path):
         synth_transcripts_arrow(n_convs=20, metronome_turns=60, seed=5).to_pandas()
     )
     # two incremental ingests -> >= 2 files per touched p_date
-    write_raw_turns(df, store, num_ranges=3, mode="overwrite")
-    write_raw_turns(df, store, num_ranges=3, mode="append")
+    write_raw_turns(df, store, mode="overwrite")
+    write_raw_turns(df, store, mode="append")
 
     parts = [d for d in os.listdir(store) if d.startswith("p_date=")]
     n_files = lambda d: len(
@@ -258,32 +280,6 @@ def test_compact_partitions_merges_append_mode_small_files(spark, tmp_path):
     rep2 = compact_partitions(spark, store)
     assert rep2["compacted"] == [] and rep2["files_after"] == len(parts)
 
-    # tier layout: pipeline writes are already 1 file per partition -> no-op,
-    # no lineage record
-    root = str(tmp_path / "tiers")
-    pipe = RollupPipeline(spark, root)
-    run = pipe.run(df, tiers=("1h",))
-    rep3 = pipe.compact_tier("1h")
-    assert rep3["compacted"] == [] and "snapshot_id" not in rep3
-    assert not [
-        f for f in os.listdir(os.path.join(root, "lineage")) if f.startswith("compact-")
-    ]
-
-    # a multi-file tier layout is compacted with a lineage record in the
-    # shared format, as is the run's
-    tier_dir = os.path.join(root, "tier=1h")
-    n_rows = pipe.read_tier("1h").count()
-    pipe.read_tier("1h").write.option("maxRecordsPerFile", 50).partitionBy("p_date") \
-        .parquet(str(tmp_path / "split"))
-    shutil.rmtree(tier_dir)
-    os.rename(str(tmp_path / "split"), tier_dir)
-    rep4 = pipe.compact_tier("1h")
-    assert rep4["compacted"] and pipe.read_tier("1h").count() == n_rows
-    for op, sid in (("rollup", run["snapshot_ids"]["1h"]), ("compact", rep4["snapshot_id"])):
-        with open(os.path.join(root, "lineage", f"{sid}.json")) as f:
-            lin = json.load(f)
-        assert (lin["version"], lin["snapshot_id"], lin["op"], lin["tier"]) == (2, sid, op, "1h")
-
 
 def test_compact_partitions_crash_recovery(spark, tmp_path):
     """Every crash state of the two-rename swap heals on the next run with
@@ -301,8 +297,8 @@ def test_compact_partitions_crash_recovery(spark, tmp_path):
     df = spark.createDataFrame(
         synth_transcripts_arrow(n_convs=12, metronome_turns=200, seed=9).to_pandas()
     )
-    write_raw_turns(df, store, num_ranges=2, mode="overwrite")
-    write_raw_turns(df, store, num_ranges=2, mode="append")
+    write_raw_turns(df, store, mode="overwrite")
+    write_raw_turns(df, store, mode="append")
     parts = sorted(d for d in os.listdir(store) if d.startswith("p_date="))
     assert len(parts) >= 2
     rows_before = spark.read.parquet(store).count()
@@ -431,8 +427,8 @@ def test_mixed_watermarks_equal_full_recompute(spark, tmp_path, count_jobs):
     behind 1m/1h (the run cuts one frame at 1d's watermark date), and only
     1m committed (1h and 1d are new beside it, so the run derives one full
     frame). Each incremental tier filters the frame at its own watermark,
-    every tier equals a full recompute, and with a fingerprint the run
-    issues at most MIXED_RUN_JOB_BUDGET jobs."""
+    every tier equals a full recompute, and the run issues at most
+    PIPELINE_JOB_BUDGET jobs."""
     upto1, upto2, upto3 = _three_days()
     full = RollupPipeline(spark, str(tmp_path / "full"))
     full.run(_mk_turns(spark, upto3))
@@ -455,7 +451,7 @@ def test_mixed_watermarks_equal_full_recompute(spark, tmp_path, count_jobs):
         df = _mk_turns(spark, upto3)
         jobs, rep = count_jobs(f"mixed-{history.__name__}", lambda: p.run(
             df, incremental=True, input_fingerprint="upto3"))
-        assert jobs <= MIXED_RUN_JOB_BUDGET, (history.__name__, jobs)
+        assert jobs <= PIPELINE_JOB_BUDGET, (history.__name__, jobs)
         assert {t for t in ("1m", "1h", "1d")
                 if rep["metrics"][t]["incremental_from"]} == set(expected), history.__name__
         _assert_lineage_matches_read_back(p, rep)
@@ -486,21 +482,15 @@ def test_ntz_input_reads_back_with_rollup_schema(spark, tmp_path):
         assert p.content_hash(t) == ref.content_hash(t), t
 
 
-# Jobs of one incremental 3-tier run without a fingerprint (local[4], AQE):
-#   2  fingerprint scan (aggregate's shuffle-map job + result job)
-#   2  shared batch: lag() window shuffle-map job, then the job that fills
-#      its cache
+# Jobs of one 3-tier run, named or not, cut or full (local[4], AQE):
+#   2  the one derived frame: lag() window shuffle-map job, then the job
+#      that fills its cache
 #   6  per tier: repartition(p_date) shuffle-map job + write job (the rollup
-#      groupBy reuses the cached batch's conv_id partitioning)
+#      groupBy reuses the cached frame's conv_id partitioning)
 #   2  convstate update: the same two jobs
 # Tiers and convstate are read with declared schemas (no schema-inference
 # job). Reading a written tier back or rescanning raw per tier pushes it over.
-PIPELINE_JOB_BUDGET = 12
-
-# A run given its fingerprint skips the scan: 2 for the one derived frame,
-# 2 per tier and 2 for convstate, whether the frame is cut or full (a new
-# tier beside incremental ones).
-MIXED_RUN_JOB_BUDGET = 10
+PIPELINE_JOB_BUDGET = 10
 
 
 def test_incremental_run_job_budget(spark, tmp_path, count_jobs):
@@ -533,8 +523,8 @@ def test_compaction_job_budget(spark, tmp_path, count_jobs):
     df = spark.createDataFrame(
         synth_transcripts_arrow(n_convs=12, metronome_turns=200, seed=9).to_pandas()
     )
-    write_raw_turns(df, store, num_ranges=2, mode="overwrite")
-    write_raw_turns(df, store, num_ranges=2, mode="append")
+    write_raw_turns(df, store, mode="overwrite")
+    write_raw_turns(df, store, mode="append")
     jobs, rep = count_jobs("compaction-job-budget", lambda: compact_partitions(spark, store))
     assert len(rep["compacted"]) >= 2
     assert jobs <= COMPACTION_JOBS_PER_PARTITION * len(rep["compacted"]), (jobs, rep)

@@ -9,6 +9,8 @@ Package + submit (the north-rule launch mode):
 Subcommands:
   synth   --out PATH --convs N [--seed S] [--metronome N] [--slices N]
   rollup  --input PATH --root PATH [--tiers 1m,1h,1d] [--incremental]
+          (the input is unnamed, so a rerun recomputes every tier; resume
+          needs RollupPipeline.run's input_fingerprint)
   bench   --input PATH [--passes N]  (prints one JSON line: turns/sec and the
                                       wall and load of every pass)
 

@@ -219,6 +219,21 @@ def jaccard_pairs(
     return out
 
 
+def _shingle_sets(docs: DataFrame, k: int, text_col: str, id_col: str) -> DataFrame:
+    """(id, sh): each document's distinct shingles, an expression on docs (no
+    explode, no exchange). One row per document, so ids must be unique."""
+    return docs.select(F.col(id_col).alias("id"), shingle_array(k, text_col).alias("sh"))
+
+
+def _signed(sets: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, sig) from _shingle_sets' (id, sh)."""
+    sig = F.array(*[
+        F.array_min(F.transform(F.col("sh"), lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s))))
+        for i in range(num_hashes)
+    ])
+    return sets.select("id", sig.alias("sig"))
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 64,
@@ -229,16 +244,9 @@ def minhash_signatures(
     """(id, sig array<string>): MinHash signature per document.
 
     h_i(s) = md5(i || ':' || s) hex string, LEXICOGRAPHIC min per salt —
-    byte-identical in DuckDB, so the oracle rebuilds the signatures."""
-    sh = word_shingles(docs, k, text_col, id_col)
-    grouped = sh.groupBy("id").agg(F.collect_set("shingle").alias("sh"))
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("sh"), lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s))))
-            for i in range(num_hashes)
-        ]
-    )
-    return grouped.select("id", sig.alias("sig"))
+    byte-identical in DuckDB, so the oracle rebuilds the signatures. One row
+    per document: ids must be unique."""
+    return _signed(_shingle_sets(docs, k, text_col, id_col), num_hashes)
 
 
 #: Default per-bucket neighbour cap for LSH candidate generation. Buckets of
@@ -385,20 +393,19 @@ def minhash_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int = LSH_BUCKET_CAP,
-    warn_cap_binding: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pipeline: shingle → sign → band → bucket →
     EXACT Jaccard verification of the candidates only. Degenerate band
-    buckets are bounded by `max_bucket_size` (see _capped_bucket_pairs)."""
-    sigs = minhash_signatures(docs, num_hashes, k, text_col, id_col)
+    buckets are bounded by `max_bucket_size` (see _capped_bucket_pairs).
+    Document ids must be unique: the signatures and the verification join
+    read one _shingle_sets row per document."""
+    sets = _shingle_sets(docs, k, text_col, id_col)
     cands = lsh_candidate_pairs(
-        sigs, bands, sig_len=num_hashes, max_bucket_size=max_bucket_size, warn_cap_binding=warn_cap_binding
+        _signed(sets, num_hashes), bands, sig_len=num_hashes, max_bucket_size=max_bucket_size
     )
-    sh = word_shingles(docs, k, text_col, id_col)
-    grouped = sh.groupBy("id").agg(F.collect_set("shingle").alias("sh"))
     j = (
-        cands.join(grouped.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(grouped.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        cands.join(sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("jaccard", F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
         .where(F.col("jaccard") >= threshold)
@@ -575,7 +582,6 @@ def ann_lsh_topk(
     dim: int | None = None,
     n_tables: int = 1,
     max_bucket_size: int = LSH_BUCKET_CAP,
-    warn_cap_binding: bool = False,
 ) -> DataFrame:
     """Approximate NN via random-hyperplane LSH: sign pattern of n_planes
     projections → bucket; candidates only form within a bucket; exact cosine
@@ -618,10 +624,7 @@ def ann_lsh_topk(
     # directed=True: both (q, c) and (c, q) come out of the single bucket
     # explode — a union of swapped halves would duplicate the whole
     # candidate-generation subtree (two bucket exchanges) in the plan
-    cand = _capped_bucket_pairs(
-        tagged, ["tbl", "bucket"], max_bucket_size, warn_cap_binding, "sign-LSH bucketing",
-        directed=True,
-    )
+    cand = _capped_bucket_pairs(tagged, ["tbl", "bucket"], max_bucket_size, directed=True)
     if n_tables > 1:
         # OR-amplification: same pair may collide in several tables — dedupe
         # on bare ids BEFORE vectors attach, so the distinct's exchange rows

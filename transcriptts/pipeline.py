@@ -9,7 +9,8 @@ branch publish, partition dir ↔ hidden partition days(bucket_start)):
 
 layout under root/ (this class is the only code that walks it):
   state.json                    -- atomic checkpoint: per-tier watermark +
-                                   last snapshot id + input fingerprint
+                                   last snapshot id + the input's name
+                                   (`input_fingerprint`, or null)
   tier=<t>/p_date=YYYY-MM-DD/   -- rollup data, partitioned by bucket date
   lineage/<snapshot>.json       -- one record per operation on a tier
 
@@ -18,22 +19,23 @@ Lineage records share one format, written by `_record`:
   op "rollup"  (run, snapshot `<tier>-<id>`): input_fingerprint, rows,
                rows_written, batch_rows, bytes, wall_sec, incremental_from,
                partitions [{p_date, rows, bytes}]
-  op "compact" (compact_tier, `compact-<tier>-<id>`): partitions,
-               files_before, files_after
   op "expire"  (retention.apply_retention, `expire-<tier>-<id>`): cutoff,
                partitions_dropped, rows_dropped, bytes_freed, archive
 Row and byte figures come from parquet footers and file sizes, never from
 reading data back.
 
 Resume semantics:
-- a tier whose state entry matches the current input fingerprint is skipped
-  entirely (idempotent rerun after a crash between tiers);
+- resume needs a named input: a tier is skipped only when the caller passes
+  `input_fingerprint` (a source snapshot id, a stream batch id) and the
+  tier's state entry carries the same name (idempotent rerun after a crash
+  between tiers). An unnamed run computes every requested tier; that is
+  safe because every tier write is an overwrite;
 - with `incremental=True` and a previously committed watermark, a tier reads
   only raw rows with ts >= date(watermark) and dynamically overwrites the
   date partitions it produces (continuous-aggregate maintenance). The
   predicate keeps history out of the window and the rollup but skips no raw
   file or row group: raw is partitioned by p_date, not ts, and INT96 ts has
-  no statistics, so the scan reads as many bytes as the fingerprint scan;
+  no statistics, so the scan reads every raw byte;
 - inter-turn latency, a lag() across the cutoff, stays EXACT via a seed-row
   table (`convstate/`: per (conv, date) that date's last turn) unioned into
   the batch and dropped before aggregation; convstate is rewritten only for
@@ -234,23 +236,19 @@ class RollupPipeline:
     ) -> dict:
         """Compute + persist the requested tiers; returns the run report.
 
-        input_fingerprint identifies the input version (e.g. source snapshot
-        id / max ingest ts). Tiers already committed for this fingerprint are
-        skipped — that is the resume path. Each tier's metrics include
-        batch_rows, the turns its aggregation read.
+        input_fingerprint names the input version (e.g. a source snapshot id
+        or a stream batch id). Tiers already committed under that name are
+        skipped — that is the resume path. Without a name every requested
+        tier is computed: no key is guessed from the data. Each tier's
+        metrics include batch_rows, the turns its aggregation read.
         """
-        if input_fingerprint is None:
-            agg = transcripts.select(
-                F.count("*").alias("n"), F.max("ts").alias("mx"), F.min("ts").alias("mn")
-            ).collect()[0]
-            input_fingerprint = f"n={agg['n']}/min={agg['mn']}/max={agg['mx']}"
-
         state = self.load_state()
         report: dict = {"snapshot_ids": {}, "skipped": [], "metrics": {}}
         todo: dict[str, str | None] = {}  # tier -> previous watermark (None: full)
         for tier in tiers:
             entry = state["tiers"].get(tier)
-            if entry and entry.get("fingerprint") == input_fingerprint:
+            if (entry and input_fingerprint is not None
+                    and entry.get("fingerprint") == input_fingerprint):
                 report["skipped"].append(tier)
             else:
                 todo[tier] = entry.get("watermark") if (entry and incremental) else None
@@ -325,25 +323,6 @@ class RollupPipeline:
         if tier not in TIERS:
             raise ValueError(f"unknown tier {tier!r}")
         return self.spark.read.schema(_TIER_SCHEMA).parquet(self._tier_path(tier))
-
-    def compact_tier(self, tier: str) -> dict:
-        """compact_partitions over one tier's layout, with a lineage record.
-
-        The tier pipeline's own writes are already 1 file per p_date
-        (repartition('p_date') before write), so this is a no-op unless a
-        partition was produced by an external writer or an old layout —
-        the append-mode raw-turns store is where compaction routinely
-        fires; use compact_partitions directly there.
-        """
-        report = compact_partitions(self.spark, self._tier_path(tier))
-        report["tier"] = tier
-        if report["compacted"]:
-            report["snapshot_id"] = self._record(
-                "compact", tier, partitions=report["compacted"],
-                files_before=report["files_before"], files_after=report["files_after"],
-            )
-        return report
-
 
     def content_hash(self, tier: str) -> str:
         """Order-insensitive logical content hash of a tier (resume tests)."""

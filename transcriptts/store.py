@@ -39,13 +39,11 @@ _SEP_TURN = "\x1f"
 _NULL_TEXT = "\x02"
 
 
-def write_raw_turns(
-    df: DataFrame, path: str, num_ranges: int | None = None, mode: str = "overwrite"
-) -> None:
-    """Persist raw turns range-partitioned by (conv_id, ts), hive-partitioned
-    by p_date, each file sorted by (conv_id, turn_idx)."""
-    sc = df.sparkSession.sparkContext
-    n = num_ranges or max(1, sc.defaultParallelism) * 2
+def write_raw_turns(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Persist raw turns range-partitioned by (conv_id, ts) into
+    2 × defaultParallelism ranges, hive-partitioned by p_date, each file
+    sorted by (conv_id, turn_idx)."""
+    n = max(1, df.sparkSession.sparkContext.defaultParallelism) * 2
     out = (
         df.select(*RAW_COLS)
         .withColumn("p_date", F.to_date("ts"))
